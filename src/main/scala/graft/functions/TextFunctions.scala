@@ -39,14 +39,6 @@ object TextFunctions {
   /** Token hash reduced into the MinHash ring [0, P). */
   def tokenHashMod(c: Column): Column = pmod(tokenHash(c), lit(HashP))
 
-  /** MinHash signature (k permutations) of a distinct-token array.
-    * Convenience form: the inline hashed array is NOT shared across the
-    * k permutation lambdas (Catalyst CSE skips lambda subtrees), so hot
-    * paths should bind `transform(toks, tokenHashMod)` as a named
-    * column and call [[minhashFromHashes]] — see Dedup.minhashSignatures. */
-  def minhashSignature(toks: Column, k: Int): Column =
-    minhashFromHashes(transform(toks, t => tokenHashMod(t)), k)
-
   /** Signature from an already-hashed (mod-P) token array. */
   def minhashFromHashes(hashedMod: Column, k: Int): Column =
     array((0 until k).map { i =>

@@ -65,9 +65,8 @@ object LshEncoding {
   /** Dictionary-encode token sets against a known vocabulary of
     * mod-P token hashes (sorted ascending). Contract: `vocab` must
     * cover every token in the corpus — unknown tokens would silently
-    * drop out of the bitmaps. Primarily what [[Auto]] resolves to;
-    * public for callers that maintain their own vocabulary. */
-  final case class Bitmap(vocab: Array[Long]) extends LshEncoding {
+    * drop out of the bitmaps. What [[Auto]] resolves to. */
+  private[operators] final case class Bitmap(vocab: Array[Long]) extends LshEncoding {
     val nanosPerCandidate: Long = 36L
   }
 }
@@ -178,16 +177,12 @@ object Dedup {
     * nothing is added or duplicated — a pair suppressed in an earlier
     * band's sub-bucketing is also suppressed at later shared bands by
     * the first-band-wins condition, which compares signature slices,
-    * not emitted pairs). Default None = exact.
-    *
-    * `capMostBlocksOver` passes [[Skew.capBlocks]]'s engagement-profile
-    * dial through — `None` (the default since round 15) AUTO-SELECTS
-    * from the cap's own phase-1 count ([[Skew.oneWindowWins]]): the
-    * pay-per-use anti/semi split when hot buckets are the exception, a
-    * single unconditional rank window when most rows sit in over-cap
-    * buckets (the driver corpus: 30-word vocabulary, q103 — measured
-    * at sf0.1: 4.6 s split vs ~3 s one-window). Row-identical output
-    * either way (SkewSpec); `Some(_)` pins a profile explicitly.
+    * not emitted pairs). Default None = exact. The split's engagement
+    * profile auto-selects from the cap's own phase-1 count
+    * ([[Skew.oneWindowWins]]): the pay-per-use anti/semi split when hot
+    * buckets are the exception, one rank window when most rows sit in
+    * over-cap buckets (the gate corpus, q103: 4.6 s split vs ~3 s
+    * one-window at sf0.1).
     *
     * `candidateBudget` is the SCALE GUARD on the UNCAPPED path
     * (round-15 verdict item 1): on boilerplate vocabularies band
@@ -231,9 +226,10 @@ object Dedup {
     * never measures. The
     * guard's histogram re-derives the cascade from `df` rather than
     * forcing the staged plan onto un-capped callers (staging is
-    * measured neutral on short-text corpora — see [[nearDedup]]).
+    * measured a loss or neutral on short-text corpora, SCALE.md
+    * round-8).
     *
-    * EAGERNESS: with a cap (or `stageCascade`) this call runs Spark
+    * EAGERNESS: with a cap this call runs Spark
     * jobs at CONSTRUCTION time, not first action — the tokenize/
     * minhash cascade is staged to scratch parquet immediately (the
     * plan consumes it up to six ways and ReuseExchange can't dedupe
@@ -245,8 +241,8 @@ object Dedup {
     * cap is passed. Callers timing or caching this operator must treat
     * construction as part of its cost (Bench does: the timed window
     * opens before the query function is invoked). Plan-only laziness
-    * requires `candidateBudget = None` (with no cap, no staging, and a
-    * non-Auto encoding).
+    * requires `candidateBudget = None` (with no cap and a non-Auto
+    * encoding).
     */
   val DefaultCandidateBudget: Long = 5000000000L
 
@@ -283,8 +279,6 @@ object Dedup {
       k: Int, bandsOf: Int, threshold: Double,
       encoding: LshEncoding = LshEncoding.MergeWalk,
       maxBucketSize: Option[Int] = None,
-      stageCascade: Boolean = false,
-      capMostBlocksOver: Option[Boolean] = None,
       candidateBudget: Option[Long] = Some(DefaultCandidateBudget),
       wallBudgetSeconds: Option[Double] = Some(DefaultWallBudgetSeconds)): DataFrame = {
     require(k % bandsOf == 0, "k must divide into bands evenly")
@@ -355,10 +349,12 @@ object Dedup {
     // DIFFERENT projection below each branch's repartition, so the
     // exchanges never canonicalize equal (measured, SCALE.md round-8).
     // Staging the cascade to scratch ONCE at call time turns every
-    // consumer into a cheap parquet scan. Mandatory under a cap,
-    // opt-in via `stageCascade` for eager callers (nearDedup);
-    // the default path stays plan-only/lazy.
-    val staged = maxBucketSize.isDefined || stageCascade
+    // consumer into a cheap parquet scan. Done under a cap only; the
+    // uncapped path stays lazy because staging lost on the short-text
+    // gate corpus (q49 4.27 -> 5.38 s, q53 noise; SCALE.md round 8),
+    // though heavy text inverted the trade (BucketCapProbe's long
+    // documents).
+    val staged = maxBucketSize.isDefined
     val sigs =
       if (staged) graft.Engine.spread(Scratch.stage(sigsRaw, "graft-lsh-sigs"))
       else sigsRaw
@@ -397,7 +393,7 @@ object Dedup {
         case Some(m) =>
           Skew.capBlocks(banded,
               concat_ws("|", col("band_idx"), col("band_key")),
-              col("id"), m, mostBlocksOver = capMostBlocksOver)
+              col("id"), m)
             .withColumn("band_key", col("__capped_block"))
             .drop("__capped_block")
         case None => banded
@@ -910,10 +906,6 @@ object Dedup {
     // encoding defaults to Auto here (unlike minhashLshPairs): the CC
     // step below runs eager jobs at call time anyway, so plan-only
     // callers don't exist and the adaptive probe costs nothing extra.
-    // stageCascade stays OFF: measured neutral on the driver corpus
-    // (short texts — the cascade is cheap there; q53 4.47 vs 4.52 s
-    // control, SCALE.md round-8), so the default avoids writing the
-    // token arrays to scratch; heavy-text corpora opt in.
     // candidateBudget passes through: the scale guard protects the
     // composed pipeline exactly like the bare pair operator.
     val clusters = connectedComponents(
@@ -940,8 +932,7 @@ object Dedup {
     */
   def incrementalLshPairs(newDf: DataFrame, corpusDf: DataFrame,
       idCol: String, textCol: String,
-      k: Int, bandsOf: Int, threshold: Double,
-      stageToks: Boolean = false): DataFrame = {
+      k: Int, bandsOf: Int, threshold: Double): DataFrame = {
     require(k % bandsOf == 0, "k must divide into bands evenly")
     // same precondition as minhashLshPairs: the degenerate-doc prune is
     // output-neutral only when empty-set pairs (jaccard 0.0) cannot pass
@@ -958,19 +949,11 @@ object Dedup {
             .as(Seq("band_idx", "band_key")))
 
     // each side's tokenize cascade feeds its band side AND its verify
-    // join-back (2 lazy derivations per side). `stageToks` materializes
-    // the UNEXPLODED (id, toks) cascade to scratch once per side — the
-    // staging form that wins on heavy text (the exploded-stream form
-    // loses, q67) — and is OFF by default: on the short-doc bench
-    // corpus the r18 A/B read it slightly WORSE (tools/StagingAb), the
-    // same answer at sfg1 (10x docs). EAGER when set (two write jobs at
-    // construction).
-    def side(df: DataFrame): DataFrame = {
-      val t = lshToks(df, idCol, textCol)
-      if (stageToks) graft.Engine.spread(Scratch.stage(t, "graft-inc-toks")) else t
-    }
-    val newToks = side(newDf)
-    val corpusToks = side(corpusDf)
+    // join-back (2 lazy derivations per side), unstaged: staging the
+    // (id, toks) arrays read slightly WORSE on the short-doc bench
+    // corpus at sf0.1 and sfg1 (r18 A/B, VERDICT.md round 18).
+    val newToks = lshToks(newDf, idCol, textCol)
+    val corpusToks = lshToks(corpusDf, idCol, textCol)
     bandsOfSide(newToks, "a")
       .join(bandsOfSide(corpusToks, "b"), Seq("band_idx", "band_key"))
       .where(col("id_a") =!= col("id_b") && !sharedEarlierBand(nBands, bandsOf))

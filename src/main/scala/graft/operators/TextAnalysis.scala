@@ -301,23 +301,14 @@ object TextAnalysis {
     * top-V cut is TakeOrderedAndProject (never a global sort); the tiny
     * vocab broadcasts back over the token stream.
     *
-    * `stageToks` materializes the UNEXPLODED (id, toks) arrays to
-    * scratch once so the two consumers (vocab count + per-doc
-    * coverage) explode from parquet instead of re-running the
-    * tokenizer. Scale-dependent dial, measured both ways (r18
-    * tools/StagingAb, clean probes): at sf0.1 (5k short docs) staging
-    * LOSES (0.63-0.76 s lazy vs 0.79-1.04 staged — the write costs
-    * more than one extra codegen tokenizer pass); at sfg1 (50k docs)
-    * it WINS ~15-20% (2.7-3.2 vs 3.2-4.1). Default stays lazy — the
-    * crossover sits above the bench corpus; heavy-text callers opt
-    * in. EAGER when set (one write job at construction). */
+    * Both consumers (vocab count + per-doc coverage) re-run the
+    * tokenizer rather than reading staged (id, toks) arrays: staging
+    * lost at sf0.1 (5k short docs) and won 15-20 % at sfg1 (50k docs)
+    * — a crossover above the bench corpus (VERDICT.md round 18). */
   def vocabCoverage(df: DataFrame, idCol: String, textCol: String,
-      topV: Int, stageToks: Boolean = false): DataFrame = {
-    val arrays = df.select(col(idCol).as("id"), tokens(col(textCol)).as("__toks"))
-    val arr =
-      if (stageToks) graft.Engine.spread(Scratch.stage(arrays, "graft-vocab-toks"))
-      else arrays
-    val toks = arr.select(col("id"), explode_outer(col("__toks")).as("tok"))
+      topV: Int): DataFrame = {
+    val toks = df.select(col(idCol).as("id"), tokens(col(textCol)).as("__toks"))
+      .select(col("id"), explode_outer(col("__toks")).as("tok"))
       .where(col("tok").isNotNull)
     val vocab = toks.groupBy(col("tok")).agg(count(lit(1)).as("__c"))
       .orderBy(col("__c").desc, col("tok")).limit(topV)
@@ -389,7 +380,7 @@ object TextAnalysis {
     // integer arithmetic, one corpus pass fewer — and the r18
     // adjudication ABAB measured it WORSE on this corpus: fromBi
     // 1.24-1.55 s vs cascade 1.17-1.20 s at sf0.1, clean probes all
-    // rounds, tools/Q90Ab. Same physics as q67: the extra
+    // rounds, VERDICT.md round 18. Same physics as q67: the extra
     // shuffle+aggregation over the bigram table costs more than one
     // more pass of the codegen'd cascade over short docs. A heavy-text
     // corpus, where a corpus pass >> a vocab^2 aggregation, would flip

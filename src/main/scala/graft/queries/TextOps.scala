@@ -296,8 +296,8 @@ object TextOps {
     * (row_number over id within (band, key) − 1) / cap, the exact
     * capBlocks rank formula (ids are non-null here, so NULLS FIRST
     * lockstep is moot). MergeWalk, not Auto: q18 already exercises the
-    * adaptive-probe path. `capMostBlocksOver` is left at its AUTO
-    * default (round 15): nearly every band bucket on this corpus
+    * adaptive-probe path. The cap's engagement profile is
+    * auto-selected (round 15): nearly every band bucket on this corpus
     * exceeds the cap, so the measured phase-1 fraction selects the
     * one-window profile (the choice this query pinned explicitly in
     * r14, 2x faster than the split here) — the gate now exercises the

@@ -294,14 +294,6 @@ object ClassifySectors {
       .withColumn("sector_processed_at", Stages.processedAt(clock))
       .drop("sector_classification")
 
-  /** Per-sector stats (extract_sectors.py:390-399). */
-  def sectorStats(classified: DataFrame): DataFrame =
-    classified
-      .groupBy("secteur_id", "secteur_nom", "categorie_parent")
-      .agg(count(lit(1)).as("offres_count"),
-        (avg(col("sector_confidence")) * 100).as("avg_confidence_pct"))
-      .orderBy(desc("offres_count"))
-
   /** Dim_Secteur rows (extract_sectors.py:402-410). */
   def dimSecteur(classified: DataFrame, clock: Option[java.sql.Timestamp] = None): DataFrame =
     classified

@@ -121,6 +121,10 @@ object Skills {
     * strips ("c#", ".net", "ci/cd") stay in the automaton and simply
     * never match, same as their `contains` never fired. */
   private object NlpAutomaton {
+    // hits pack one bit per category into a Long; at 64 entries
+    // allMask would wrap to 0 and every scan would report no hits
+    require(nlpCatalog.size <= 63,
+      s"Skills.nlpCatalog has ${nlpCatalog.size} entries; NlpAutomaton packs at most 63")
     private val children = scala.collection.mutable.ArrayBuffer(
       new java.util.HashMap[Char, Int]())
     private val masks = scala.collection.mutable.ArrayBuffer(0L)
@@ -184,15 +188,16 @@ object Skills {
     nlpPatterns.map(java.util.regex.Pattern.compile).toArray
 
   /** Spark `initcap` semantics (first letter of each space-delimited
-    * word uppercased, everything else lowercased) for the pattern-hit
+    * word title-cased, everything else lowercased) for the pattern-hit
     * names — kept exactly aligned with the expression form the oracle
-    * replays. */
-  private def initcapLike(s: String): String = {
+    * replays. Title case, not upper case: they differ on digraphs such
+    * as U+01F3, and `initcap` uses `Character.toTitleCase`. */
+  private[textkit] def initcapLike(s: String): String = {
     val lo = s.toLowerCase(java.util.Locale.ROOT)
     val sb = new StringBuilder(lo.length)
     var prevSpace = true
     lo.foreach { ch =>
-      sb.append(if (prevSpace) Character.toUpperCase(ch) else ch)
+      sb.append(if (prevSpace) Character.toTitleCase(ch) else ch)
       prevSpace = ch == ' '
     }
     sb.toString

@@ -316,25 +316,19 @@ class PlanContractSpec extends AnyFunSuite {
       "the parse cascade must be cut off by the dedup staging boundary")
   }
 
-  test("capped LSH auto-selects one-window on the all-hot driver corpus; split stays reachable") {
-    // Round 15: capMostBlocksOver defaults to AUTO, and on the driver
-    // corpus (30-word vocabulary — nearly every band bucket is over
-    // any production cap) the measured over-cap fraction selects the
-    // one-window profile, the plan q103 measured 2x faster than the
-    // split here (SCALE.md round-14). The pay-per-use split — the
-    // right plan for rarely-fired safety valves (~30% saved,
-    // BucketCapProbe round-8) — must stay reachable via the explicit
-    // override.
+  test("capped LSH auto-selects one-window on the all-hot driver corpus") {
+    // Round 15: the cap's engagement profile is AUTO-selected, and on
+    // the gate corpus (30-word vocabulary — nearly every band bucket
+    // is over any production cap) the measured over-cap fraction
+    // selects the one-window profile, the plan q103 measured 2x faster
+    // than the split here (SCALE.md round-14). The pay-per-use split
+    // itself is pinned at the Skew level (SkewSpec).
     val docs = graft.Engine.table(spark, dir, "documents")
-    def plan(profile: Option[Boolean]) = graft.operators.Dedup.minhashLshPairs(
+    val auto = graft.operators.Dedup.minhashLshPairs(
         docs, "doc_id", "text", k = 16, bandsOf = 4, threshold = 0.7,
-        maxBucketSize = Some(8), capMostBlocksOver = profile)
+        maxBucketSize = Some(8))
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
-    val auto = plan(None)
     assert(!auto.contains("LeftAnti") && auto.contains("Window"),
       "auto must select the one-window profile on the all-hot corpus:\n" + auto)
-    val split = plan(Some(false))
-    assert(split.contains("LeftAnti"),
-      "the explicit pay-per-use override must keep the anti/semi split:\n" + split)
   }
 }

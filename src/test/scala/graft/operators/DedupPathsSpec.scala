@@ -107,18 +107,19 @@ class DedupPathsSpec extends AnyFunSuite {
     assert(pairs(LshEncoding.MergeWalk) == pairs(LshEncoding.Auto))
   }
 
-  test("stageCascade is a physical-only dial: staged output equals lazy output") {
-    // the heavy-text dial (SCALE.md round-8): staging the tokenize/
-    // minhash cascade to scratch must never change the emitted pairs
+  test("cap above every bucket: staged capped output equals lazy output") {
+    // the capped path is the one that stages the tokenize/minhash
+    // cascade to scratch (SCALE.md round-8); with a cap above every
+    // bucket's size it must emit exactly the uncapped (lazy) pairs
     val docs = corpus(nTemplates = 8, tokensPer = 25, perTemplate = 4,
       universeOffset = 100).toDF("doc_id", "text")
-    def pairs(staged: Boolean) =
+    def pairs(cap: Option[Int]) =
       Dedup.minhashLshPairs(docs, "doc_id", "text", K, BandRows, Threshold,
-          LshEncoding.MergeWalk, stageCascade = staged)
+          LshEncoding.MergeWalk, maxBucketSize = cap)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val lazyPairs = pairs(staged = false)
+    val lazyPairs = pairs(None)
     assert(lazyPairs.nonEmpty, "fixture must produce pairs to pin anything")
-    assert(pairs(staged = true) == lazyPairs)
+    assert(pairs(Some(docs.count().toInt + 1)) == lazyPairs)
   }
 
   test("incrementalLshPairs == whole-corpus LSH restricted to cross pairs") {

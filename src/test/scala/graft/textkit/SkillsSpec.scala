@@ -64,6 +64,15 @@ class SkillsSpec extends AnyFunSuite {
     assert(got.forall(_.isEmpty))
   }
 
+  test("initcapLike title-cases like Spark initcap on digraph-initial words") {
+    // U+01F3 (dz digraph) upper-cases to U+01F1 but title-cases to
+    // U+01F2; Spark's initcap takes the title case
+    val s = "\u01F3emal \u01F1ava x\u01F3 plain"
+    val spark = Seq(s).toDF("s").select(initcap($"s")).as[String].first()
+    assert(Skills.initcapLike(s) == spark)
+    assert(spark.startsWith("\u01F2"))
+  }
+
   test("automaton nlp extraction equals the expression form (order included)") {
     // the r18 single-pass kernel must be value- AND order-identical to
     // the expression form the oracle replays; fixtures exercise nested
