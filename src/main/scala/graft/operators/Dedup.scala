@@ -988,8 +988,7 @@ object Dedup {
     * @return updated (id, cluster_id) covering prior ids plus every id
     *         appearing in newPairs
     */
-  def mergeClusters(prior: DataFrame, newPairs: DataFrame,
-      scope: graft.CacheScope = graft.CacheScope.unmanaged): DataFrame = {
+  def mergeClusters(prior: DataFrame, newPairs: DataFrame): DataFrame = {
     val pr = prior.select(col("id").cast("long").as("id"),
       col("cluster_id").cast("long").as("cluster_id"))
     // newPairs is typically an LSH pair-generation plan, and it feeds
@@ -997,10 +996,10 @@ object Dedup {
     // three lineage evaluations without a cache. persist() is lazy (no
     // job here); the fill happens inside connectedComponents' eager
     // pairs materialization below, and the cache stays part of the
-    // returned plan's working set (newIds reads it on every action) —
-    // release it by closing `scope` once done acting on the result.
-    val np = scope.pin(newPairs
-      .select(col("id_a").cast("long").as("id_a"), col("id_b").cast("long").as("id_b")))
+    // returned plan's working set (newIds reads it on every action).
+    val np = newPairs
+      .select(col("id_a").cast("long").as("id_a"), col("id_b").cast("long").as("id_b"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     def rooted(side: String): Column = coalesce(col(s"r_$side"), col(s"id_$side"))
     val rootPairs = np
       .join(pr.select(col("id").as("id_a"), col("cluster_id").as("r_a")), Seq("id_a"), "left")

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Graph operators for corpus curation. PageRank over a host/link
   * graph is the classic crawl-quality prior (domain authority feeding
@@ -24,14 +25,10 @@ object Graph {
   /** @param edges    directed (src, dst) string-id pairs, pre-deduped
     * @param iters    power iterations (plan depth grows linearly)
     * @param damping  walk-follow probability (teleport = 1 - damping)
-    * @param scope    release handle for the two caches this call pins
-    *                 ([[graft.CacheScope]]); close it when done acting
-    *                 on the returned plan
     * @return (node, pr) for every node appearing in `edges`, where pr
     *         sums to ~1 over nodes reachable of the teleport+walk mix
     */
-  def pageRank(edges: DataFrame, iters: Int, damping: Double,
-      scope: graft.CacheScope = graft.CacheScope.unmanaged): DataFrame = {
+  def pageRank(edges: DataFrame, iters: Int, damping: Double): DataFrame = {
     require(iters >= 1 && damping > 0.0 && damping < 1.0)
     val e = edges.select(col("src").cast("string").as("src"),
       col("dst").cast("string").as("dst"))
@@ -41,12 +38,13 @@ object Graph {
     // build still runs zero jobs — and turns k-iteration plans from k
     // re-executions of the edge build into one fill + k cache scans.
     // The caches are part of the returned plan's working set (every
-    // action re-reads them), not a leak; one-shot callers release them
-    // by closing `scope` after their action.
-    val withDeg = scope.pin(e.join(
-      e.groupBy("src").agg(count(lit(1)).cast("double").as("outdeg")), "src"))
-    val nodes = scope.pin(e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct())
+    // action re-reads them), not a leak.
+    val withDeg = e.join(
+      e.groupBy("src").agg(count(lit(1)).cast("double").as("outdeg")), "src")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val nodes = e.select(col("src").as("node"))
+      .unionByName(e.select(col("dst").as("node"))).distinct()
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val nCount = nodes.agg(count(lit(1)).cast("double").as("__n"))
     val r0 = nodes.join(broadcast(nCount))
       .select(col("node"), (lit(1.0) / col("__n")).as("pr"))
@@ -82,12 +80,9 @@ object Graph {
     *
     * @param edges (a, b) node-id pairs; symmetric/duplicate/self edges
     *              tolerated (canonicalized + deduped internally)
-    * @param scope release handle for the oriented-edge cache this call
-    *              pins (same convention as [[pageRank]])
     * @return (node, triangles) for every node in ≥ 1 triangle
     */
-  def triangleCounts(edges: DataFrame,
-      scope: graft.CacheScope = graft.CacheScope.unmanaged): DataFrame = {
+  def triangleCounts(edges: DataFrame): DataFrame = {
     val canon = edges
       .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
       .where(col("a") =!= col("b"))
@@ -100,14 +95,15 @@ object Graph {
     // degree-join probe and the orientation projection over all |E|
     // edges would re-run per branch — pin the oriented list itself
     // (narrow: two id columns), same discipline as pageRank's edges.
-    val oriented = scope.pin(canon
+    val oriented = canon
       .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
       .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
       .select(
         when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
           col("a")).otherwise(col("b")).as("src"),
         when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
-          col("b")).otherwise(col("a")).as("dst")))
+          col("b")).otherwise(col("a")).as("dst"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     // wedges at each source, as canonical unordered (x < y) pairs
     val wedges = oriented.select(col("src"), col("dst").as("x"))
       .join(oriented.select(col("src"), col("dst").as("y")), "src")

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.TextFunctions
 
@@ -39,8 +40,7 @@ object Retrieval {
       textCol: String,
       terms: Seq[String],
       k1: Double = 1.2,
-      b: Double = 0.75,
-      scope: graft.CacheScope = graft.CacheScope.unmanaged): DataFrame = {
+      b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty && terms.forall(t => t == t.toLowerCase))
     val qTerms = terms.distinct
     // ONE tokenize scan. The corpus-stats aggregate (every doc) and
@@ -49,14 +49,14 @@ object Retrieval {
     // scan+tokenize cost per branch. Reduce each doc to (dl, per-term
     // counts) in the map stage — O(|terms|) ints per doc, no token
     // arrays — and pin that NARROW frame (lazy persist, pageRank's
-    // convention: filled by the first action, released via `scope`;
-    // far smaller than caching the tokenized corpus itself).
-    val perDoc = scope.pin(
-      docs
-        .select(col(idCol).as("doc_id"), TextFunctions.tokens(col(textCol)).as("toks"))
-        .select(col("doc_id"), size(col("toks")).cast("double").as("dl"),
-          array(qTerms.map(t => size(filter(col("toks"), x => x === lit(t)))): _*)
-            .as("tcs")))
+    // convention: filled by the first action; far smaller than caching
+    // the tokenized corpus itself).
+    val perDoc = docs
+      .select(col(idCol).as("doc_id"), TextFunctions.tokens(col(textCol)).as("toks"))
+      .select(col("doc_id"), size(col("toks")).cast("double").as("dl"),
+        array(qTerms.map(t => size(filter(col("toks"), x => x === lit(t)))): _*)
+          .as("tcs"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val stats = perDoc.agg(
       count(lit(1)).cast("double").as("n_docs"), avg(col("dl")).as("avgdl"))
     val tf = perDoc
@@ -88,9 +88,8 @@ object Retrieval {
       terms: Seq[String],
       k: Int,
       k1: Double = 1.2,
-      b: Double = 0.75,
-      scope: graft.CacheScope = graft.CacheScope.unmanaged): DataFrame =
-    bm25Scores(docs, idCol, textCol, terms, k1, b, scope)
+      b: Double = 0.75): DataFrame =
+    bm25Scores(docs, idCol, textCol, terms, k1, b)
       .select(col("doc_id"), graft.queries.roundSafe(col("score"), 6).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)

@@ -13,7 +13,7 @@ import org.apache.spark.sql.DataFrame
   * for long sessions and benchmarks — it leaves NOTHING registered in
   * the CacheManager to evict, spill, or remember to release. The write
   * is one eager job at operator-construction time; callers for whom
-  * plan laziness matters should keep persist() (see [[graft.CacheScope]]).
+  * plan laziness matters should keep persist().
   *
   * Dirs are FS-qualified so a cluster deployment lands them on the
   * checkpoint filesystem (set `spark.sparkContext.setCheckpointDir` to
@@ -92,9 +92,10 @@ object Scratch {
       }.sum
   }
 
-  /** Codec for scratch writes (A/B via SPARK_GRAFT_SCRATCH_CODEC). */
-  private[operators] val Codec =
-    sys.env.getOrElse("SPARK_GRAFT_SCRATCH_CODEC", "zstd")
+  /** Codec for scratch writes. lz4 lost to zstd on the staging-heavy
+    * q49/q50 ABAB at sf0.1 (q50 4.35 vs 3.88 s, q49 6.56 vs 6.10 s):
+    * zstd's smaller files win the read-back (OPTIMIZATION_r17.md §7). */
+  private[operators] val Codec = "zstd"
 
   /** Delete every registered scratch dir NOW. Only sound when every
     * plan built over staged frames has been discarded (a later action

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`Array[Float]`), pure Column expressions (zip_with/aggregate fold —
@@ -87,8 +88,7 @@ object SimilaritySearch {
     * over the whole corpus. Production form: write it out bucketed by
     * list instead. */
   def ivfIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      nLists: Int, seed: Long = 42L,
-      scope: graft.CacheScope = graft.CacheScope.unmanaged): IvfIndex = {
+      nLists: Int, seed: Long = 42L): IvfIndex = {
     // spread: the toVec/transform UDF kernels over a single-file
     // corpus scan would otherwise fill the index on one core (SCALE.md).
     // Null vectors are dropped like every other entry point (ivfAssign,
@@ -100,9 +100,10 @@ object SimilaritySearch {
       .withColumn("features", toVec(transform(col("vec"), x => x.cast("double"))))
     val model = new org.apache.spark.ml.clustering.KMeans()
       .setK(nLists).setSeed(seed).setMaxIter(20).fit(feats)
-    val assigned = scope.pin(model.transform(feats)
+    val assigned = model.transform(feats)
       .select(col("id"), col("vec"), l2Norm(col("vec")).as("norm"),
-        col("prediction").as("bucket")))
+        col("prediction").as("bucket"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val centroids = model.clusterCenters.zipWithIndex
       .map { case (c, i) => (i, c.toArray) }
     IvfIndex(assigned, centroids)
@@ -116,8 +117,7 @@ object SimilaritySearch {
     * replayable by the q98 DuckDB oracle; KMeans-trained indexes stay
     * spec-gated (AnnSpec). Centroids must be sorted by id. */
   def ivfAssign(corpus: DataFrame, idCol: String, vecCol: String,
-      centroids: Array[(Int, Array[Double])],
-      scope: graft.CacheScope = graft.CacheScope.unmanaged): IvfIndex = {
+      centroids: Array[(Int, Array[Double])]): IvfIndex = {
     val cents = centroids // ships in the closure
     val dim0 = centroids.headOption.map(_._2.length).getOrElse(0)
     val assignU = udf((v: Seq[Double]) => {
@@ -150,11 +150,12 @@ object SimilaritySearch {
     // assigned to a list (the Scala argmin would NPE where the
     // expression paths propagate null) — same policy as AsOfJoin's
     // null ordinals.
-    val assigned = scope.pin(graft.Engine.spread(corpus)
+    val assigned = graft.Engine.spread(corpus)
       .where(col(vecCol).isNotNull)
       .select(col(idCol).as("id"),
         col(vecCol).as("vec"), l2Norm(col(vecCol)).as("norm"),
-        assignU(transform(col(vecCol), x => x.cast("double"))).as("bucket")))
+        assignU(transform(col(vecCol), x => x.cast("double"))).as("bucket"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     IvfIndex(assigned, centroids)
   }
 
@@ -219,28 +220,31 @@ object SimilaritySearch {
     * the encoded corpus is persisted — it IS the index, 32x smaller
     * than the float vectors. */
   def pqIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      m: Int, k: Int, seed: Long = 42L,
-      scope: graft.CacheScope = graft.CacheScope.unmanaged): PqIndex = {
+      m: Int, k: Int, seed: Long = 42L): PqIndex = {
     // null vectors dropped before the dim probe and the subspace fits —
     // same policy as ivfIndex/ivfAssign/pqEncode
     val base = corpus.where(col(vecCol).isNotNull)
       .select(col(idCol).as("id"),
         transform(col(vecCol), x => x.cast("double")).as("v")).persist()
-    val dim = base.select(size(col("v"))).first().getInt(0)
-    require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
-    val dsub = dim / m
-    val subVec = udf((v: Seq[Double], s: Int) =>
-      org.apache.spark.ml.linalg.Vectors.dense(
-        v.slice(s * dsub, (s + 1) * dsub).toArray))
-    val codebooks = (0 until m).map { s =>
-      val feats = base.select(subVec(col("v"), lit(s)).as("features"))
-      new org.apache.spark.ml.clustering.KMeans()
-        .setK(k).setSeed(seed + s).setMaxIter(20).fit(feats)
-        .clusterCenters.map(_.toArray)
-    }.toArray
-    val index = pqEncode(corpus, idCol, vecCol, codebooks, scope)
-    base.unpersist()
-    index
+    // the training cache is released on every exit, a failed require
+    // included — only the encoded codes outlive this call
+    val codebooks = try {
+      val first = base.select(size(col("v"))).take(1)
+      require(first.nonEmpty, "pqIndex: no non-null vectors to train on")
+      val dim = first(0).getInt(0)
+      require(dim % m == 0, s"pqIndex: dim $dim must split evenly into $m subspaces")
+      val dsub = dim / m
+      val subVec = udf((v: Seq[Double], s: Int) =>
+        org.apache.spark.ml.linalg.Vectors.dense(
+          v.slice(s * dsub, (s + 1) * dsub).toArray))
+      (0 until m).map { s =>
+        val feats = base.select(subVec(col("v"), lit(s)).as("features"))
+        new org.apache.spark.ml.clustering.KMeans()
+          .setK(k).setSeed(seed + s).setMaxIter(20).fit(feats)
+          .clusterCenters.map(_.toArray)
+      }.toArray
+    } finally base.unpersist()
+    pqEncode(corpus, idCol, vecCol, codebooks)
   }
 
   /** Encode `corpus` against GIVEN codebooks (nearest centroid per
@@ -251,8 +255,7 @@ object SimilaritySearch {
     * [[pqSearch]] is an exact left-to-right double fold, replayable by
     * the q96 DuckDB oracle (KMeans-trained codebooks are not). */
   def pqEncode(corpus: DataFrame, idCol: String, vecCol: String,
-      codebooks: Array[Array[Array[Double]]],
-      scope: graft.CacheScope = graft.CacheScope.unmanaged): PqIndex = {
+      codebooks: Array[Array[Array[Double]]]): PqIndex = {
     val cb = codebooks // ships in the encode closure
     val m = cb.length
     val dsub = cb(0)(0).length
@@ -283,10 +286,11 @@ object SimilaritySearch {
     // [[ivfAssign]]. The pin is LAZY (ivfIndex/ivfAssign convention):
     // a single-search caller encodes inline with its one scan instead
     // of paying a separate fill job plus a cache read.
-    val codes = scope.pin(graft.Engine.spread(corpus)
+    val codes = graft.Engine.spread(corpus)
       .where(col(vecCol).isNotNull)
       .select(col(idCol).as("id"),
-        encode(transform(col(vecCol), x => x.cast("double"))).as("codes")))
+        encode(transform(col(vecCol), x => x.cast("double"))).as("codes"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     PqIndex(codes, codebooks)
   }
 

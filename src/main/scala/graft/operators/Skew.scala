@@ -57,7 +57,7 @@ object Skew {
     * caller feeds a spread (repartitioned) or scratch-staged scan, so
     * the upstream runs once per action; callers adding a capBlocks over
     * expensive exchange-free lineage should stage it first (the
-    * Stages.apply idiom). The over-cap key set is broadcast: its size
+    * Matching.score idiom). The over-cap key set is broadcast: its size
     * is bounded by distinct-blocks-over-cap (≤ rows/cap), vanishingly
     * small for a production cap set above the p99 legitimate block.
     *
@@ -65,9 +65,9 @@ object Skew {
     * default since round 15) AUTO-SELECTS from the phase-1 measurement
     * (see [[oneWindowWins]]); `Some(_)` pins a profile explicitly.
     * Both shapes measured (SCALE.md round-8): when the cap is a
-    * safety valve that rarely fires (LSH hot-bucket guard, title-block
-    * guard — the default), pay-per-use wins because under-cap rows
-    * skip the rank shuffle entirely. When the caller KNOWS most rows
+    * safety valve that rarely fires (the LSH hot-bucket guard — the
+    * default), pay-per-use wins because under-cap rows skip the rank
+    * shuffle entirely. When the caller KNOWS most rows
     * sit in over-cap blocks — low-cardinality blocking keys split
     * intentionally, Matching's sector/location blocks — the split is
     * pure overhead (the window ranks nearly everything anyway, and the

@@ -197,37 +197,15 @@ object Deduplicate {
       .select("similarity_key", "job_id_1", "job_id_2", "similarity_score")
   }
 
-  /** Optional guard for pathological blocks (boilerplate titles at
-    * 100 TB): blocks larger than `maxBlockSize` are split into capped
-    * sub-blocks that only pair internally (Skew.capBlocks) — bounds the
-    * worst-case pair count per block at maxBlockSize^2 at the cost of
-    * cross-sub-block recall. 0 disables. */
   def apply(jobs: DataFrame, threshold: Double = 0.7,
-      clock: Option[java.sql.Timestamp] = None,
-      maxBlockSize: Int = 0): DataFrame = {
-    val prepared0 = prepare(jobs)
-    // capping only affects PAIRING; the stage output keeps the real key
-    val capped =
-      if (maxBlockSize <= 0) prepared0.withColumn("__pair_key", col("similarity_key"))
-      else {
-        // capBlocks' plan consumes its input three ways (size count +
-        // under/over branches) and the prepare() cascade has no
-        // reusable exchange: feed it a scratch-staged frame so those
-        // passes scan parquet, not the UDF cascade ×3
-        val staged0 = graft.operators.Scratch.stage(prepared0, "graft-dedup-prep-pre")
-        graft.operators.Skew
-          .capBlocks(staged0, col("similarity_key"), col("job_id"), maxBlockSize)
-          .withColumnRenamed("__capped_block", "__pair_key")
-      }
+      clock: Option[java.sql.Timestamp] = None): DataFrame = {
     // staged ONCE (the Matching.score idiom): this frame feeds the
     // pair self-join (both sides), the flag join-back, and the
     // keep-best ranking — left lazy, the prepare() UDF cascade
     // (HTML/NLP/salary kernels when materialize=false upstream)
     // re-executes ~6x in one action
-    val prepared = graft.operators.Scratch.stage(capped, "graft-dedup-prep")
-    val pairs = duplicatePairs(
-      prepared.drop("similarity_key").withColumnRenamed("__pair_key", "similarity_key"),
-      threshold)
+    val prepared = graft.operators.Scratch.stage(prepare(jobs), "graft-dedup-prep")
+    val pairs = duplicatePairs(prepared, threshold)
     val flagged = pairs.select(explode(array(col("job_id_1"), col("job_id_2"))).as("job_id"))
       .distinct()
     val withFlag = prepared.join(flagged.withColumn("is_dup", lit(true)), Seq("job_id"), "left")
@@ -235,7 +213,7 @@ object Deduplicate {
     // unrelated (unflagged) offer in the same block must not outrank
     // and wipe the cluster
     val keepers = withFlag.where(col("is_dup").isNull)
-    val w = Window.partitionBy(col("__pair_key"))
+    val w = Window.partitionBy(col("similarity_key"))
       .orderBy(col("completeness_score").desc, col("parsed_at").desc,
         Normalize.sourcePriority(col("source")).desc, col("job_id"))
     val bestDups = withFlag.where(col("is_dup") === true)
@@ -244,39 +222,7 @@ object Deduplicate {
       .drop("rn")
     keepers.unionByName(bestDups)
       .withColumn("deduplicated_at", Stages.processedAt(clock))
-      .drop("is_dup", "__pair_key")
-  }
-
-  /** Scale variant of the keep-best selection: instead of a window
-    * (sort within every blocking-key partition), a single-pass hash
-    * aggregate with `max_by` over a lexicographic struct ordering —
-    * partial aggregation combines map-side, so the shuffle carries one
-    * candidate row per (key, partition), not every duplicate. Same
-    * survivors as the window form (equivalence is tested). */
-  def applySinglePass(jobs: DataFrame, threshold: Double = 0.7,
-      clock: Option[java.sql.Timestamp] = None): DataFrame = {
-    // staged for the same multi-consumer reason as apply()
-    val prepared = graft.operators.Scratch.stage(prepare(jobs), "graft-dedup-prep")
-    val pairs = duplicatePairs(prepared, threshold)
-    val flagged = pairs.select(explode(array(col("job_id_1"), col("job_id_2"))).as("job_id"))
-      .distinct()
-    val withFlag = prepared.join(flagged.withColumn("is_dup", lit(true)), Seq("job_id"), "left")
-    val dupRows = withFlag.where(col("is_dup") === true).drop("is_dup")
-    val keepers = withFlag.where(col("is_dup").isNull).drop("is_dup")
-    val cols = dupRows.columns
-    // Lexicographic struct ordering = the keep-best criteria over the
-    // flagged cluster only (same population the window form ranks);
-    // job_id last makes ties deterministic (largest id — the window
-    // form's tiebreak is smallest id; both arbitrary in the reference's
-    // spec, divergence covered by the equivalence test's tie-free data).
-    val best = dupRows
-      .groupBy(col("similarity_key"))
-      .agg(max_by(struct(cols.toIndexedSeq.map(col): _*), struct(
-        col("completeness_score"), col("parsed_at"),
-        Normalize.sourcePriority(col("source")), col("job_id"))).as("row"))
-      .select(col("row.*"))
-    keepers.unionByName(best)
-      .withColumn("deduplicated_at", Stages.processedAt(clock))
+      .drop("is_dup")
   }
 }
 

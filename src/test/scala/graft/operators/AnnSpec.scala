@@ -108,6 +108,24 @@ class AnnSpec extends AnyFunSuite {
     assert(fwd(1).isNullAt(fwd(1).fieldIndex("payload")))
   }
 
+  test("pqIndex on an empty or all-null corpus fails by name and releases its cache") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    def cachedCount: Int = spark.sparkContext.getPersistentRDDs.size
+    val baseline = cachedCount
+    val empty = Seq[(Long, Seq[Float])]((1L, Seq(1.0f, 0.0f)))
+      .toDF("vec_id", "embedding").where(lit(false))
+    val allNull = Seq[(Long, Seq[Float])]((1L, null), (2L, null))
+      .toDF("vec_id", "embedding")
+    Seq(empty, allNull).foreach { corpus =>
+      val err = intercept[IllegalArgumentException] {
+        SimilaritySearch.pqIndex(corpus, "vec_id", "embedding", m = 1, k = 2)
+      }
+      assert(err.getMessage.contains("pqIndex"), err.getMessage)
+      assert(cachedCount == baseline, "the training cache must not outlive the failure")
+    }
+  }
+
   test("null embeddings are dropped by every index entry point; dim mismatch dies named") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col

@@ -18,7 +18,8 @@ import graft.TestSpark.spark
   *
   * Deliberately NOT covered: ivfIndex/pqIndex (KMeans TRAINING on an
   * empty corpus is a genuine caller error — there is nothing to fit;
-  * the deterministic ivfAssign path below is the empty-safe form) and
+  * the deterministic ivfAssign path below is the empty-safe form, and
+  * pqIndex on an empty corpus fails BY NAME, pinned in AnnSpec) and
   * the streaming operators (no-data micro-batches are exercised by
   * their own AvailableNow specs).
   */
@@ -71,18 +72,12 @@ class EmptyInputSpec extends AnyFunSuite {
   }
 
   test("pageRank on an empty edge list returns no ranks (no 0-division)") {
-    graft.CacheScope.scoped { scope =>
-      assert(Graph.pageRank(emptyEdges, iters = 3, damping = 0.85, scope)
-        .count() == 0)
-    }
+    assert(Graph.pageRank(emptyEdges, iters = 3, damping = 0.85).count() == 0)
   }
 
   test("triangleCounts on an empty edge list") {
-    graft.CacheScope.scoped { scope =>
-      assert(Graph.triangleCounts(
-        emptyEdges.select(col("src").as("a"), col("dst").as("b")), scope)
-        .count() == 0)
-    }
+    assert(Graph.triangleCounts(
+      emptyEdges.select(col("src").as("a"), col("dst").as("b"))).count() == 0)
   }
 
   test("matching: empty sides stage and score to empty, no scratch read-back throw") {
@@ -128,12 +123,9 @@ class EmptyInputSpec extends AnyFunSuite {
     assert(SimilaritySearch.bruteForceTopK(
       emptyVecs, "vec_id", "embedding", Seq(1L), 5).count() == 0)
     val centroids = Array((0, Array(0.0, 0.0)), (1, Array(1.0, 1.0)))
-    graft.CacheScope.scoped { scope =>
-      val idx = SimilaritySearch.ivfAssign(emptyVecs, "vec_id", "embedding",
-        centroids, scope)
-      assert(SimilaritySearch.ivfSearch(idx, emptyVecs, "vec_id", "embedding",
-        k = 5, nProbe = 2).count() == 0)
-    }
+    val idx = SimilaritySearch.ivfAssign(emptyVecs, "vec_id", "embedding", centroids)
+    assert(SimilaritySearch.ivfSearch(idx, emptyVecs, "vec_id", "embedding",
+      k = 5, nProbe = 2).count() == 0)
     assert(SimilaritySearch.quantizedTopK(
       SimilaritySearch.quantizeInt8(emptyVecs, "vec_id", "embedding"),
       Seq(1L), 5).count() == 0)

@@ -191,6 +191,31 @@ class OperatorsSpec extends AnyFunSuite {
     assert(n.get() == 0, s"plan-only pageRank ran ${n.get()} jobs")
   }
 
+  test("pageRank and mergeClusters persist reused intermediates; clearCache releases them") {
+    // Both operators persist the frames every iteration/branch re-reads;
+    // the session-wide release is Bench.resetSession's clearCache, and
+    // a released plan stays valid — it recomputes the same answer.
+    def cachedCount: Int = spark.sparkContext.getPersistentRDDs.size
+    spark.catalog.clearCache()
+    val baseline = cachedCount
+    val edges = Seq(("a", "b"), ("b", "c"), ("c", "a")).toDF("src", "dst")
+    val pr = Graph.pageRank(edges, iters = 3, damping = 0.85)
+    val ranks = pr.collect().toSet
+    assert(ranks.size == 3)
+    val afterPr = cachedCount
+    assert(afterPr > baseline, "pageRank should have filled its persisted caches")
+    val prior = Seq((1L, 1L), (2L, 1L)).toDF("id", "cluster_id")
+    val merged = Dedup.mergeClusters(prior, Seq((2L, 3L)).toDF("id_a", "id_b"))
+    val clusters = merged.collect().toSet
+    assert(clusters.size == 3)
+    assert(cachedCount > afterPr, "mergeClusters should have filled its persisted pair batch")
+    spark.catalog.clearCache()
+    assert(cachedCount == baseline, "clearCache must release every persisted intermediate")
+    assert(pr.collect().toSet == ranks)
+    assert(merged.collect().toSet == clusters)
+    spark.catalog.clearCache()
+  }
+
   test("language id picks the marker-dominant language") {
     val df = Seq(
       "the cat and the dog is in the house of the king",

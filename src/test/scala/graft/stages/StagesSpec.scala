@@ -87,7 +87,7 @@ class StagesSpec extends AnyFunSuite {
     // mx1/mx2 are a >= 0.7 pair; mx3 shares the blocking key (same
     // first-3 title tokens + company + location) but is dissimilar
     // (< 0.7) AND outranks both on recency — it must survive AND the
-    // cluster's best (mx1) must too, in both dedup forms
+    // cluster's best (mx1) must too
     val later = java.sql.Timestamp.valueOf("2025-12-03 00:00:00")
     val df = parsedDf(Seq(
       parsedRow("mx1", "educarriere", "Développeur Python Senior NSIA", "ACME", "Abidjan"),
@@ -98,36 +98,9 @@ class StagesSpec extends AnyFunSuite {
         "ACME", "Abidjan")))
       .withColumn("parsed_at",
         when($"job_id" === "mx3", lit(later)).otherwise($"parsed_at"))
-    val windowed = Deduplicate(df, clock = clock)
+    val survivors = Deduplicate(df, clock = clock)
       .select("job_id").as[String].collect().toSet
-    val singlePass = Deduplicate.applySinglePass(df, clock = clock)
-      .select("job_id").as[String].collect().toSet
-    assert(windowed == Set("mx1", "mx3"))
-    assert(singlePass == Set("mx1", "mx3"))
-  }
-
-  test("maxBlockSize capping preserves the original similarity_key in output") {
-    val df = parsedDf(Seq(
-      parsedRow("ck1", "educarriere", "Développeur Python Senior", "ACME", "Abidjan"),
-      parsedRow("ck2", "linkedin", "Développeur Python Senior", "ACME", "Abidjan",
-        salary = null)))
-    val out = Deduplicate(df, clock = clock, maxBlockSize = 1)
-    val keys = out.select("similarity_key").as[String].collect().toSet
-    assert(keys.forall(!_.contains("#")), s"leaked capped key: $keys")
-  }
-
-  test("single-pass keep-best dedup selects the same survivors as the window form") {
-    val df = parsedDf(Seq(
-      parsedRow("id1", "educarriere", "Développeur Python Senior", "NSIA Banque", "Abidjan"),
-      parsedRow("id2", "linkedin", "Développeur Python Senior", "NSIA Banque", "Abidjan",
-        salary = null),
-      parsedRow("id3", "emploi_ci", "Comptable confirmé", "Cabinet XYZ", "Bouaké")))
-    val windowed = Deduplicate(df, clock = clock)
-      .select("job_id").as[String].collect().toSet
-    val singlePass = Deduplicate.applySinglePass(df, clock = clock)
-      .select("job_id").as[String].collect().toSet
-    assert(windowed == singlePass)
-    assert(singlePass == Set("id1", "id3"))
+    assert(survivors == Set("mx1", "mx3"))
   }
 
   test("malformed blob without separator degrades to defaults, not a crash") {
