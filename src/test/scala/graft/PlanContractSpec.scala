@@ -82,16 +82,19 @@ class PlanContractSpec extends AnyFunSuite {
       "the benchmark probe must not shuffle the corpus gram stream")
   }
 
-  test("q50 dedups narrow pair ids: no skill array crosses the pair-dedup exchange") {
+  test("q50 blocked candidates are duplicate-free: no pair-id shuffle or aggregate") {
     val p = plan("q50_matching_scores")
-    // the (job_id, candidate_id) dedup aggregate must run on bare ids —
-    // competences_ids appearing inside a hashpartitioning(...) of the
-    // dedup would mean the wide rows are back in the pair shuffle
-    val dedupExchanges = "hashpartitioning\\(job_id[^)]*candidate_id[^)]*\\)".r
-      .findAllIn(p).toSeq
-    assert(dedupExchanges.nonEmpty, "expected a pair-id dedup exchange")
-    assert(!dedupExchanges.exists(_.contains("competences")),
-      "pair dedup must shuffle bare ids, not attribute rows")
+    // the location join excludes pairs the sector join already emits,
+    // so no pair-id dedup may come back: no exchange partitions on both
+    // ids and no aggregate keys on both (either order)
+    def bothIds(s: String) = s.contains("job_id") && s.contains("candidate_id")
+    val pairExchanges = "hashpartitioning\\([^)]*\\)".r.findAllIn(p).filter(bothIds).toSeq
+    assert(pairExchanges.isEmpty, s"pair-id exchange is back: $pairExchanges\n$p")
+    val pairAggs = "Keys \\[\\d+\\]: \\[[^\\]]*\\]".r.findAllIn(p).filter(bothIds).toSeq
+    assert(pairAggs.isEmpty, s"pair-id aggregate is back: $pairAggs\n$p")
+    // the rank<=5 filter still pushes a group limit below the top-k window
+    assert("Window \\(\\d+\\)\\s+\\+- WindowGroupLimit".r.findFirstIn(p).nonEmpty,
+      "top-k must push a group limit below the rank window:\n" + p)
   }
 
   test("q63 broadcasts quantized queries and group-limits the top-k window") {

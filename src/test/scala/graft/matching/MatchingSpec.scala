@@ -202,6 +202,59 @@ class MatchingSpec extends AnyFunSuite {
     assert(capped == exact, s"capped path invented pairs: ${capped -- exact}")
   }
 
+  test("blocked candidates are duplicate-free and equal the distinct union of both block joins") {
+    // overlapping sector and location blocks, null sectors and null
+    // locations on both sides, and pairs whose sectors are both null
+    // but whose locations match — only the location join may emit
+    // those. Long ids so the hashed sub-block mode applies.
+    val offersN = (1L to 12L).map(i => (i,
+        if (i % 7 == 0) null else s"L${i % 3}", if (i % 5 == 0) null else s"S${i % 2}",
+        Seq("COMP_x"), 100000L, "Débutant"))
+      .toDF("offre_id", "localisation_id", "secteur_id", "competences_ids",
+        "salaire_max", "niveau_experience")
+    val cvsN = (101L to 114L).map(i => (i,
+        if (i % 6 == 0) null else s"L${i % 3}", if (i % 4 == 0) null else s"S${i % 2}",
+        Seq("COMP_x"), 100000.0, 2L))
+      .toDF("cv_id", "localisation_souhaitee_id", "secteur_souhaite_id",
+        "competences_ids", "salaire_souhaite", "annees_experience")
+    def pairs(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    // the q50/q95/q101 oracles' `cand` CTE: each block join on its
+    // (sub-)block key over non-null keys, unioned, distinct
+    def blockPairs(cap: Option[Int], hashed: Boolean): (Set[(Long, Long)], Set[(Long, Long)]) = {
+      def keyed(side: org.apache.spark.sql.DataFrame, key: String, id: String) = {
+        val nonNull = side.where(col(key).isNotNull)
+        (cap match {
+          case None => nonNull.withColumn("__capped_block", col(key))
+          case Some(m) if hashed =>
+            graft.operators.Skew.capBlocksHashed(nonNull, col(key), col(id), m)
+          case Some(m) => graft.operators.Skew.capBlocks(nonNull, col(key), col(id), m)
+        }).select(col(id), col("__capped_block"))
+      }
+      def blockJoin(oKey: String, cKey: String) = pairs(
+        keyed(offersN, oKey, "offre_id")
+          .join(keyed(cvsN, cKey, "cv_id").withColumnRenamed("__capped_block", "__cb_c"),
+            col("__capped_block") === col("__cb_c"))
+          .select("offre_id", "cv_id"))
+      (blockJoin("secteur_id", "secteur_souhaite_id").toSet,
+        blockJoin("localisation_id", "localisation_souhaitee_id").toSet)
+    }
+    // the fixture reaches the cases it is for: offer 5 and CV 104 have
+    // null sectors and share L2; sector and location pairs overlap
+    val (sector, location) = blockPairs(None, hashed = false)
+    assert(location.contains((5L, 104L)) && !sector.contains((5L, 104L)))
+    assert((sector intersect location).nonEmpty)
+    Seq((None, false), (Some(2), false), (Some(2), true)).foreach { case (cap, hashed) =>
+      val got = pairs(Matching.score(offersN, cvsN, None, maxBlockSize = cap,
+        hashedSubBlocks = hashed).select("job_id", "candidate_id"))
+      assert(got.size == got.distinct.size,
+        s"cap=$cap hashed=$hashed emitted duplicate pairs: ${got.diff(got.distinct)}")
+      val want = { val (s, l) = blockPairs(cap, hashed); s ++ l }
+      assert(got.toSet == want, s"cap=$cap hashed=$hashed: missing " +
+        s"${want -- got.toSet}, extra ${got.toSet -- want}")
+    }
+  }
+
   test("component functions handle nulls") {
     val df = Seq((null: Seq[String], Seq("COMP_x"), null: java.lang.Long,
       null: java.lang.Double)).toDF("os", "cs", "omax", "want")
