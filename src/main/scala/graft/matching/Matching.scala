@@ -121,7 +121,9 @@ object Matching {
     * ~cap in expectation only. The rank mode is right while the
     * largest block's sort fits a task; the hash mode is the 100 TB
     * escape hatch when it doesn't. Both pair same-index sub-blocks and
-    * both are oracle-replayed (q95 / q101).
+    * both are oracle-replayed (q95 / q101). Each is one lazy plan —
+    * a rank window, or per-block counts joined onto every row — so a
+    * capped call's construction runs only the two staging writes.
     *
     * PRECONDITION: `offre_id` and `cv_id` are non-null keys, as they
     * are in Fact_OffresEmploi and Fact_CVs. Each output row is one
@@ -238,45 +240,28 @@ object Matching {
     // the quadratic join starts. Reads the UN-spread staged frames: a
     // count needs no spread exchange.
     if (maxBlockSize.isEmpty) pairBudget.foreach { budget =>
-      val crossBound = BigInt(2) * BigInt(oRows) * BigInt(cRows)
-      if (crossBound > BigInt(budget)) {
-        def est(side: DataFrame, key: String, idAlias: String) = side
-          .where(col(key).isNotNull)
-          .groupBy(col(key).as("__k")).agg(count(lit(1)).as(idAlias))
-        def blocked(oKey: String, cKey: String) =
-          est(oStaged, oKey, "__no").join(est(cStaged, cKey, "__nc"), "__k")
-            .select(concat(lit(s"$oKey="), col("__k").cast("string")).as("__key"),
-              (col("__no") * col("__nc")).as("__p"))
-        // staged so the plan executes ONCE: the sum (every measured
-        // call) and the failure path's top-3 offenders both read the
-        // tiny staged histogram instead of re-running the per-block
-        // aggregation (round-16 ADVICE — the old orderBy/limit re-ran
-        // the measurement job right before throwing)
-        val perKey = graft.operators.Scratch.stage(
-          blocked("o_sect", "c_sect").unionByName(blocked("o_loc", "c_loc")),
-          "graft-match-guard")
-        val measured = perKey.agg(coalesce(sum(col("__p")), lit(0L)))
-          .first().getLong(0)
-        if (measured > budget) {
-          // only on the failure path (the exception is the product):
-          // the top-3 blocks by pair volume name the skew culprits
-          val top = perKey.orderBy(col("__p").desc, col("__key")).limit(3)
-            .collect().map(r => s"${r.getString(0)} ~${r.getLong(1)} pairs")
-            .mkString("; ")
-          throw new graft.operators.ScaleGuardException(
-            s"Matching.score: the uncapped blocked join would generate ~$measured " +
-              s"candidate pairs, estimated " +
-              s"${graft.operators.Dedup.estimatedWall(measured, PairWallNanos)} " +
-              s"wall at the scorer's measured ~$PairWallNanos ns/pair " +
-              s"(pairBudget $budget). Top blocks by pair volume: " +
-              s"$top. Sector/location blocking keys " +
-              "have fixed cardinality, so this volume grows QUADRATICALLY with the " +
-              "corpus (sf1 measured 245.6 s uncapped vs <=18.1 s capped, exponent " +
-              "2.08 vs <=0.57 — SCALE.md round 14). Pass maxBlockSize (the " +
-              "oracle-gated recall/cost dial, q95/q101; add hashedSubBlocks=true " +
-              "for giant blocks), raise pairBudget, or pass pairBudget=None for a " +
-              "deliberate exact quadratic run.")
-        }
+      def est(side: DataFrame, key: String, idAlias: String) = side
+        .where(col(key).isNotNull)
+        .groupBy(col(key).as("__k")).agg(count(lit(1)).as(idAlias))
+      def blocked(oKey: String, cKey: String) =
+        est(oStaged, oKey, "__no").join(est(cStaged, cKey, "__nc"), "__k")
+          .select(concat(lit(s"$oKey="), col("__k").cast("string")).as("__key"),
+            (col("__no") * col("__nc")).as("__pairs"))
+      graft.operators.ScaleGuard.enforce(budget, BigInt(2) * BigInt(oRows) * BigInt(cRows),
+        blocked("o_sect", "c_sect").unionByName(blocked("o_loc", "c_loc")),
+        "graft-match-guard", _.getString(0)) { (measured, top) =>
+        s"Matching.score: the uncapped blocked join would generate ~$measured " +
+          s"candidate pairs, estimated " +
+          s"${graft.operators.ScaleGuard.estimatedWall(measured, PairWallNanos)} " +
+          s"wall at the scorer's measured ~$PairWallNanos ns/pair " +
+          s"(pairBudget $budget). Top blocks by pair volume: " +
+          s"$top. Sector/location blocking keys " +
+          "have fixed cardinality, so this volume grows QUADRATICALLY with the " +
+          "corpus (sf1 measured 245.6 s uncapped vs <=18.1 s capped, exponent " +
+          "2.08 vs <=0.57 — SCALE.md round 14). Pass maxBlockSize (the " +
+          "oracle-gated recall/cost dial, q95/q101; add hashedSubBlocks=true " +
+          "for giant blocks), raise pairBudget, or pass pairBudget=None for a " +
+          "deliberate exact quadratic run."
       }
     }
 
@@ -289,17 +274,9 @@ object Matching {
       maxBlockSize match {
         case None => side.withColumn(as, col(key))
         case Some(m) =>
-          // mostBlocksOver: sector/location blocking keys are
-          // low-cardinality — the cap deliberately splits nearly every
-          // block, so the pay-per-use split is pure overhead here
-          // (q95 A/B in SCALE.md round-8)
           val capped =
-            if (hashedSubBlocks)
-              graft.operators.Skew.capBlocksHashed(side, col(key), col(id), m,
-                mostBlocksOver = Some(true))
-            else
-              graft.operators.Skew.capBlocks(side, col(key), col(id), m,
-                mostBlocksOver = Some(true))
+            if (hashedSubBlocks) graft.operators.Skew.capBlocksHashed(side, col(key), col(id), m)
+            else graft.operators.Skew.capBlocks(side, col(key), col(id), m)
           // capBlocks gives the null block its own sub-blocks (right for
           // dedup-style callers); nulling the key here keeps the cap from
           // inventing null×null pairs the uncapped equi-join excludes

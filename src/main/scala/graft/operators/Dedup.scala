@@ -177,12 +177,9 @@ object Dedup {
     * nothing is added or duplicated — a pair suppressed in an earlier
     * band's sub-bucketing is also suppressed at later shared bands by
     * the first-band-wins condition, which compares signature slices,
-    * not emitted pairs). Default None = exact. The split's engagement
-    * profile auto-selects from the cap's own phase-1 count
-    * ([[Skew.oneWindowWins]]): the pay-per-use anti/semi split when hot
-    * buckets are the exception, one rank window when most rows sit in
-    * over-cap buckets (the gate corpus, q103: 4.6 s split vs ~3 s
-    * one-window at sf0.1).
+    * not emitted pairs). Default None = exact. The cap is one rank
+    * window over every bucket; on the gate corpus (q103) most banded
+    * rows sit in over-cap buckets (72.9 % at sf0.01, 88.7 % at sf0.1).
     *
     * `candidateBudget` is the SCALE GUARD on the UNCAPPED path
     * (round-15 verdict item 1): on boilerplate vocabularies band
@@ -232,10 +229,11 @@ object Dedup {
     * EAGERNESS: with a cap this call runs Spark
     * jobs at CONSTRUCTION time, not first action — the tokenize/
     * minhash cascade is staged to scratch parquet immediately (the
-    * plan consumes it up to six ways and ReuseExchange can't dedupe
-    * the differently-pruned branches — see the inline note), and the
-    * capBlocks split adds its eager phase-1 bucket count. Since round
-    * 15 the DEFAULT path is eager too: the scale guard's count job
+    * plan consumes it several ways and ReuseExchange can't dedupe
+    * the differently-pruned branches — see the inline note), and that
+    * staging is all the capped path runs at construction (the cap
+    * itself is a lazy rank window). Since round 15 the DEFAULT path
+    * is eager too: the scale guard's count job
     * (plus, past the cross-product bound, its histogram job) runs at
     * construction whenever `candidateBudget` is set and no
     * cap is passed. Callers timing or caching this operator must treat
@@ -266,15 +264,6 @@ object Dedup {
       }
     }
 
-  /** Human-readable wall estimate for `pairs` candidates at `nanos`
-    * ns/candidate — quoted by the guard's failure message so the
-    * count's operational meaning is visible without rate arithmetic.
-    * private[graft]: Matching.score's guard quotes the same form. */
-  private[graft] def estimatedWall(pairs: Long, nanos: Long): String = {
-    val sec = pairs.toDouble * nanos / 1e9
-    if (sec >= 120) f"~${sec / 60}%.0f min" else f"~$sec%.0f s"
-  }
-
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
       k: Int, bandsOf: Int, threshold: Double,
       encoding: LshEncoding = LshEncoding.MergeWalk,
@@ -301,53 +290,36 @@ object Dedup {
     if (maxBucketSize.isEmpty) effectivePairBudget(candidateBudget,
         wallBudgetSeconds, encoding.nanosPerCandidate).foreach { budget =>
       val n = BigInt(df.count())
-      val crossBound = BigInt(k / bandsOf) * n * (n - 1) / 2
-      if (crossBound > BigInt(budget)) {
-        // staged so the cascade-deriving histogram executes ONCE: the
-        // sum (every measured call) and the failure path's top-3
-        // offenders both read the narrow staged rows instead of
-        // re-deriving the tokenize/minhash cascade (round-16 ADVICE)
-        val perBucket = Scratch.stage(
-          bandBucketSizes(df, idCol, textCol, k, bandsOf)
-            .select(col("band_idx"), col("band_key"),
-              expr("size * (size - 1) div 2").as("__pairs")),
-          "graft-lsh-guard")
-        val measured = perBucket.agg(coalesce(sum(col("__pairs")), lit(0L)))
-          .first().getLong(0)
-        if (measured > budget) {
-          // failure path only: name the skew culprits — the hot
-          // (band, key) buckets a melted user asks about first
-          val top = perBucket.orderBy(col("__pairs").desc, col("band_idx"), col("band_key"))
-            .limit(3).collect()
-            .map(r => s"band ${r.getInt(0)} key ${r.getString(1)} ~${r.getLong(2)} pairs")
-            .mkString("; ")
-          throw new ScaleGuardException(
-            s"Dedup.minhashLshPairs: uncapped banding would generate ~$measured " +
-              s"candidate pairs, estimated " +
-              s"${estimatedWall(measured, encoding.nanosPerCandidate)} wall at " +
-              s"this encoding tier's measured ~${encoding.nanosPerCandidate} " +
-              s"ns/candidate (effective budget $budget pairs = min of " +
-              s"candidateBudget ${candidateBudget.mkString} and wallBudgetSeconds " +
-              s"${wallBudgetSeconds.fold("none")(_.toString)} at that rate). " +
-              s"Top band buckets by " +
-              s"pair volume: $top. Hot band buckets grow " +
-              "with the corpus on boilerplate vocabularies and in-bucket pairs " +
-              "quadratically (sf1 measured exponent 1.23 uncapped vs 0.52 capped " +
-              "— SCALE.md round 14). Pass maxBucketSize (the oracle-gated " +
-              "recall/cost dial, q103), raise candidateBudget/wallBudgetSeconds, " +
-              "or pass candidateBudget=None for a deliberate exact run.")
-        }
+      ScaleGuard.enforce(budget, BigInt(k / bandsOf) * n * (n - 1) / 2,
+        bandBucketSizes(df, idCol, textCol, k, bandsOf)
+          .select(col("band_idx"), col("band_key"),
+            expr("size * (size - 1) div 2").as("__pairs")),
+        "graft-lsh-guard", r => s"band ${r.getInt(0)} key ${r.getString(1)}") {
+        (measured, top) =>
+          s"Dedup.minhashLshPairs: uncapped banding would generate ~$measured " +
+            s"candidate pairs, estimated " +
+            s"${ScaleGuard.estimatedWall(measured, encoding.nanosPerCandidate)} wall at " +
+            s"this encoding tier's measured ~${encoding.nanosPerCandidate} " +
+            s"ns/candidate (effective budget $budget pairs = min of " +
+            s"candidateBudget ${candidateBudget.mkString} and wallBudgetSeconds " +
+            s"${wallBudgetSeconds.fold("none")(_.toString)} at that rate). " +
+            s"Top band buckets by " +
+            s"pair volume: $top. Hot band buckets grow " +
+            "with the corpus on boilerplate vocabularies and in-bucket pairs " +
+            "quadratically (sf1 measured exponent 1.23 uncapped vs 0.52 capped " +
+            "— SCALE.md round 14). Pass maxBucketSize (the oracle-gated " +
+            "recall/cost dial, q103), raise candidateBudget/wallBudgetSeconds, " +
+            "or pass candidateBudget=None for a deliberate exact run."
       }
     }
     val toksRaw = lshToks(df, idCol, textCol)
     val sigsRaw = toksRaw.select(col("id"), col("toks"),
       minhashFromHashes(col("toks"), k).as("sig"))
     // The plan consumes the tokenize/minhash cascade four ways (two
-    // band-join sides + two verify join-backs; six under a cap, where
-    // the capBlocks split adds its bucket-size count and branches) and
-    // ReuseExchange cannot dedupe them: column pruning pushes a
-    // DIFFERENT projection below each branch's repartition, so the
-    // exchanges never canonicalize equal (measured, SCALE.md round-8).
+    // band-join sides + two verify join-backs) and ReuseExchange
+    // cannot dedupe them: column pruning pushes a DIFFERENT projection
+    // below each branch's repartition, so the exchanges never
+    // canonicalize equal (measured, SCALE.md round-8).
     // Staging the cascade to scratch ONCE at call time turns every
     // consumer into a cheap parquet scan. Done under a cap only; the
     // uncapped path stays lazy because staging lost on the short-text
@@ -385,10 +357,6 @@ object Dedup {
       // sub-bucket (id-ranked within the original (band, key) bucket)
       // so the join machinery below is untouched; band_idx rides along
       // for the first-band-wins condition as before
-      // capBlocks' three consumers of its input (size count, under
-      // branch, over branch) all reuse the upstream spread exchange
-      // (lshToks' or the staged read's), so the tokenize/minhash
-      // cascade runs once per action either way
       maxBucketSize match {
         case Some(m) =>
           Skew.capBlocks(banded,

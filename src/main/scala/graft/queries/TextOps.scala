@@ -279,8 +279,8 @@ object TextOps {
   /** How many rows one LSH band bucket may hold in q103 before
     * `Skew.capBlocks` splits it — small enough that the driver corpus
     * (30-word vocabulary, heavily colliding buckets) fires the cap at
-    * sf0.01, so the gate exercises the SPLIT path, not the no-over-cap
-    * fast path. */
+    * sf0.01: 72.9 % of banded rows sit in over-cap buckets there, 88.7 %
+    * at sf0.1. */
   private val LshCapBucket = 8
 
   /** q18's banded LSH under the hot-bucket cap (`maxBucketSize` →
@@ -296,12 +296,8 @@ object TextOps {
     * (row_number over id within (band, key) − 1) / cap, the exact
     * capBlocks rank formula (ids are non-null here, so NULLS FIRST
     * lockstep is moot). MergeWalk, not Auto: q18 already exercises the
-    * adaptive-probe path. The cap's engagement profile is
-    * auto-selected (round 15): nearly every band bucket on this corpus
-    * exceeds the cap, so the measured phase-1 fraction selects the
-    * one-window profile (the choice this query pinned explicitly in
-    * r14, 2x faster than the split here) — the gate now exercises the
-    * selection rule end-to-end, not just the profile. */
+    * adaptive-probe path. The cap is one rank window over every
+    * bucket, built without a Spark job. */
   private def q103(s: SparkSession, dir: String): DataFrame =
     Dedup.minhashLshPairs(table(s, dir, "documents"), "doc_id", "text",
       MinhashK, BandRows, 0.4, graft.operators.LshEncoding.MergeWalk,

@@ -209,14 +209,6 @@ object HtmlExtract {
     }.getOrElse("Non spécifié")
   }
 
-  val titleUdf: UserDefinedFunction = udf(extractTitle _)
-  val companyUdf: UserDefinedFunction = udf(extractCompany _)
-  val descriptionUdf: UserDefinedFunction = udf(extractDescription _)
-  val requirementsUdf: UserDefinedFunction = udf(extractRequirements _)
-  val locationUdf: UserDefinedFunction = udf(extractLocation _)
-  val salaryTextUdf: UserDefinedFunction = udf(extractSalaryText _)
-  val contractTypeUdf: UserDefinedFunction = udf(extractContractType _)
-
   /** All seven fields of one page. Field names are the reference's
     * output column names (parse_jobs.py's select), so `page.*` after
     * [[pageUdf]] needs no aliasing. */
@@ -224,13 +216,11 @@ object HtmlExtract {
     requirements: String, location: String, salary_text: String,
     contract_type: String)
 
-  /** All seven cascades in ONE UDF invocation, composing the same
-    * kernel functions the per-field UDFs wrap (parity is shared by
-    * construction — ReferenceParitySpec pins the kernels themselves).
-    * Seven separate UDF calls pay the UTF8String→String conversion of
-    * the page and the per-call invocation overhead seven times per
-    * row; batching them is a pure hot-path saving with identical
-    * semantics. Keep the struct in its own projection (select the UDF,
+  /** All seven cascades in ONE UDF invocation, composing the seven
+    * `extract*` kernel functions above directly (ReferenceParitySpec
+    * pins the kernels themselves). One UDF per field would pay the
+    * UTF8String→String conversion of the page and the per-call
+    * invocation overhead seven times per row. Keep the struct in its own projection (select the UDF,
     * THEN expand fields): CollapseProject never duplicates a non-cheap
     * expression, which is what guarantees one invocation per row. */
   val pageUdf: UserDefinedFunction = udf((html: String) => PageFields(

@@ -320,12 +320,10 @@ class PlanContractSpec extends AnyFunSuite {
   }
 
   test("capped LSH auto-selects one-window on the all-hot driver corpus") {
-    // Round 15: the cap's engagement profile is AUTO-selected, and on
+    // The cap is one rank window; no anti/semi split may appear. On
     // the gate corpus (30-word vocabulary — nearly every band bucket
-    // is over any production cap) the measured over-cap fraction
-    // selects the one-window profile, the plan q103 measured 2x faster
-    // than the split here (SCALE.md round-14). The pay-per-use split
-    // itself is pinned at the Skew level (SkewSpec).
+    // is over any production cap) a split measured 2x slower for q103
+    // (SCALE.md round-14).
     val docs = graft.Engine.table(spark, dir, "documents")
     val auto = graft.operators.Dedup.minhashLshPairs(
         docs, "doc_id", "text", k = 16, bandsOf = 4, threshold = 0.7,

@@ -122,6 +122,48 @@ class DedupPathsSpec extends AnyFunSuite {
     assert(pairs(Some(docs.count().toInt + 1)) == lazyPairs)
   }
 
+  test("capped minhashLshPairs construction runs only its scratch-staging jobs") {
+    // the cap is one lazy rank window: building the capped plan may run
+    // the cascade's staging (its write plus the read-back's footer
+    // job) and nothing else — no bucket-size measurement action
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val docs = corpus(nTemplates = 8, tokensPer = 25, perTemplate = 4,
+      universeOffset = 100).toDF("doc_id", "text")
+    val plans = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    // the SQL execution id of every job started during `f` ("null"
+    // for jobs outside any SQL execution)
+    def jobExecsDuring(f: => Unit): Seq[String] = {
+      val ids = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          ids.add(String.valueOf(e.properties.getProperty("spark.sql.execution.id")))
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case x: SparkListenerSQLExecutionStart =>
+            plans.put(x.executionId.toString, x.physicalPlanDescription)
+          case _ =>
+        }
+      }
+      spark.sparkContext.addSparkListener(l)
+      try { f; Thread.sleep(500) } finally spark.sparkContext.removeSparkListener(l)
+      ids.toArray.map(_.toString).toSeq
+    }
+    val capped = jobExecsDuring {
+      Dedup.minhashLshPairs(docs, "doc_id", "text", K, BandRows, Threshold,
+        maxBucketSize = Some(2)).queryExecution.executedPlan
+    }
+    val execs = capped.filter(_ != "null").distinct
+    assert(execs.length == 1, s"construction ran ${execs.length} SQL executions")
+    val staging = Option(plans.get(execs.head)).getOrElse("")
+    assert(staging.contains("InsertIntoHadoopFsRelationCommand") &&
+      staging.contains("graft-lsh-sigs"),
+      s"the one construction execution must be the cascade staging write:\n$staging")
+    // outside SQL executions: exactly what a bare staging's read-back costs
+    val reference = jobExecsDuring { Scratch.stage(docs, "graft-spec-ref") }
+    assert(capped.count(_ == "null") == reference.count(_ == "null"),
+      s"capped construction jobs $capped vs bare staging $reference")
+  }
+
   test("incrementalLshPairs == whole-corpus LSH restricted to cross pairs") {
     // split a ladder corpus into batch (every 3rd doc) and corpus; the
     // incremental operator must produce exactly the cross-set subset of

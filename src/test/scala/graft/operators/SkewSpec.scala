@@ -41,52 +41,59 @@ class SkewSpec extends AnyFunSuite {
     assert(sizes("b#0") == 1L)
   }
 
-  test("capBlocks modes are row-identical (pay-per-use vs mostBlocksOver)") {
-    // mixed profile: one over-cap block, one exactly-at-cap, one tiny,
-    // one null block — the two physical plans must agree row-for-row
-    val rows = (1 to 75).map(i => (Some("hot"), i.toLong)) ++
-      (1 to 30).map(i => (Some("edge"), (100 + i).toLong)) ++
-      Seq((Some("tiny"), 200L), (None: Option[String], 201L), (None, 202L))
-    val df = rows.toDF("block", "id")
-    def dump(mode: Option[Boolean]) =
-      Skew.capBlocks(df, $"block", $"id", maxPerBlock = 30, mostBlocksOver = mode)
-        .select("block", "id", "__capped_block").collect()
-        .map(r => (Option(r.getString(0)), r.getLong(1), r.getString(2)))
-        .sortBy(t => (t._1.getOrElse(""), t._2)).toSeq
-    // all THREE selections agree: both explicit profiles and the
-    // round-15 auto default (which measures and picks one of them)
-    assert(dump(Some(false)) == dump(Some(true)))
-    assert(dump(None) == dump(Some(true)))
+  /** Mixed profile: one over-cap block, one exactly-at-cap, one tiny,
+    * and a null block of two rows — every edge the cap has. */
+  private def mixed(hotId: Int => Long, edgeBase: Long, tail: Long) =
+    ((1 to 75).map(i => (Some("hot"), hotId(i))) ++
+      (1 to 30).map(i => (Some("edge"), edgeBase + i)) ++
+      Seq((Some("tiny"), tail), (None: Option[String], tail + 1), (None, tail + 2)))
+      .toDF("block", "id")
+
+  private def subBlockSizes(capped: org.apache.spark.sql.DataFrame): Map[String, Long] =
+    capped.groupBy("__capped_block").count().collect()
+      .map(r => (r.getString(0), r.getLong(1))).toMap
+
+  test("capBlocks assigns rank sub-blocks on the mixed fixture") {
+    // hot 75 -> 30/30/15; exactly-at-cap stays one sub-block; the two
+    // null-block rows get their own non-null key
+    val capped = Skew.capBlocks(mixed(_.toLong, 100L, 200L), $"block", $"id",
+      maxPerBlock = 30)
+    assert(subBlockSizes(capped) == Map("hot#0" -> 30L, "hot#1" -> 30L,
+      "hot#2" -> 15L, "edge#0" -> 30L, "tiny#0" -> 1L, "__null_block__#0" -> 2L))
+    // rank order is by id: the sub-block boundary falls at id 30/31
+    val hot = capped.where($"block" === "hot").collect()
+      .map(r => (r.getAs[Long]("id"), r.getAs[String]("__capped_block"))).toMap
+    assert(hot(30L) == "hot#0" && hot(31L) == "hot#1" && hot(61L) == "hot#2")
   }
 
-  test("auto profile selection follows the measured over-cap row fraction") {
-    // the pinned rule: one-window engages at >= 50% of rows in
-    // over-cap blocks (q95's all-over corpus measured the split at
-    // +39%; the LSH safety-valve corpora sit near 0%)
-    assert(!Skew.oneWindowWins(totalRows = 100, overRows = 0))
-    assert(!Skew.oneWindowWins(totalRows = 100, overRows = 49))
-    assert(Skew.oneWindowWins(totalRows = 100, overRows = 50))
-    assert(Skew.oneWindowWins(totalRows = 100, overRows = 100))
-    assert(!Skew.oneWindowWins(totalRows = 0, overRows = 0))
-    // plan-shape witnesses: an all-hot corpus auto-selects the
-    // one-window profile (no anti/semi Union), a mostly-cold corpus
-    // the pay-per-use split (Union present)
+  test("capBlocks and capBlocksHashed run no Spark job at construction") {
+    // one lazy plan each: neither an all-hot nor a mostly-cold corpus
+    // may trigger a measurement action while the plan is built
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    def jobsDuring(f: => Unit): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger(0)
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(l)
+      try { f; Thread.sleep(500) } finally spark.sparkContext.removeSparkListener(l)
+      n.get()
+    }
     val hot = (1 to 100).map(i => ("giant", i.toLong)).toDF("block", "id")
-    val hotPlan = Skew.capBlocks(hot, $"block", $"id", maxPerBlock = 30)
-      .queryExecution.sparkPlan.toString
-    assert(!hotPlan.contains("Union"),
-      s"all-hot corpus must auto-select one-window (no split):\n$hotPlan")
-    val cold = (1 to 100).map(i => (s"b${i % 50}", i.toLong)) ++
-      (1 to 40).map(i => ("hot", (1000 + i).toLong))
-    val coldPlan = Skew.capBlocks(cold.toDF("block", "id"), $"block", $"id",
-        maxPerBlock = 30).queryExecution.sparkPlan.toString
-    assert(coldPlan.contains("Union"),
-      s"mostly-cold corpus must auto-select the pay-per-use split:\n$coldPlan")
-    // same rule, hashed plan: all-hot auto-selects the all-blocks join
-    val hotHashed = Skew.capBlocksHashed(hot, $"block", $"id", maxPerBlock = 30)
-      .queryExecution.sparkPlan.toString
-    assert(!hotHashed.contains("Union"),
-      s"all-hot corpus must auto-select the all-blocks hashed join:\n$hotHashed")
+    val cold = ((1 to 100).map(i => (s"b${i % 50}", i.toLong)) ++
+      (1 to 40).map(i => ("hot", (1000 + i).toLong))).toDF("block", "id")
+    for ((name, df) <- Seq("all-hot" -> hot, "mostly-cold" -> cold)) {
+      val rank = jobsDuring {
+        Skew.capBlocks(df, $"block", $"id", maxPerBlock = 30).queryExecution.executedPlan
+      }
+      assert(rank == 0, s"capBlocks on the $name corpus ran $rank jobs at construction")
+      val hashed = jobsDuring {
+        Skew.capBlocksHashed(df, $"block", $"id", maxPerBlock = 30).queryExecution.executedPlan
+      }
+      assert(hashed == 0, s"capBlocksHashed on the $name corpus ran $hashed jobs at construction")
+    }
+    // positive control: the same listener sees an action's job
+    assert(jobsDuring(hot.count()) > 0)
   }
 
   test("capBlocks rejects reserved columns and non-positive caps") {
@@ -99,55 +106,15 @@ class SkewSpec extends AnyFunSuite {
     }
   }
 
-  test("capBlocks skips the broadcast hint above broadcastKeyLimit (shuffled fallback)") {
-    // 5 over-cap blocks, limit 3: the over-cap key set must NOT be
-    // broadcast-hinted (a dense corpus under a small cap can push it
-    // past the driver/broadcast ceiling) — the planner falls back to
-    // shuffled anti/semi joins, and the OUTPUT stays identical to the
-    // hinted plan
-    val rows = (0 until 5).flatMap(b => (1 to 40).map(i => (s"blk$b", (b * 100 + i).toLong)))
-    val df = rows.toDF("block", "id")
-    def dump(limit: Long) =
-      Skew.capBlocks(df, $"block", $"id", maxPerBlock = 30,
-        mostBlocksOver = Some(false), broadcastKeyLimit = limit)
-        .select("block", "id", "__capped_block").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getString(2))).sortBy(t => (t._1, t._2)).toSeq
-    // disable stats-based auto-broadcast: these in-memory fixtures are
-    // tiny enough that the planner would broadcast them hint or no
-    // hint, masking exactly the guard under test (at the scale the
-    // guard exists for, the key set is past any auto threshold too)
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prior = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try {
-      // profile pinned to the split: this all-over-cap fixture would
-      // auto-select one-window (no joins at all), masking the guard
-      val guarded = Skew.capBlocks(df, $"block", $"id", maxPerBlock = 30,
-        mostBlocksOver = Some(false), broadcastKeyLimit = 3)
-      val planned = guarded.queryExecution.sparkPlan.toString
-      assert(!planned.contains("BroadcastHashJoin"),
-        s"over-cap key set must not be broadcast above the limit:\n$planned")
-      val hinted = Skew.capBlocks(df, $"block", $"id", maxPerBlock = 30,
-        mostBlocksOver = Some(false), broadcastKeyLimit = 5)
-        .queryExecution.sparkPlan.toString
-      assert(hinted.contains("BroadcastHashJoin"),
-        s"within the limit the key set must still broadcast:\n$hinted")
-    } finally spark.conf.set(key, prior)
-    assert(dump(3) == dump(Skew.DefaultBroadcastKeyLimit))
-  }
-
   test("capBlocks with zero over-cap blocks plans no joins at all") {
-    // pay-per-use's designed-for common case: the cap never fires, so
-    // the result must be a pure projection — no anti/semi joins, no
-    // window (the previous always-built split cost ~11.6% idle
-    // overhead, SCALE.md round-8)
+    // a cap above every block (the safety-valve setting): the rank
+    // window still runs, every row lands in sub-block 0 and none is
+    // lost — and the plan stays join-free
     val df = (1 to 50).map(i => (s"b${i % 10}", i.toLong)).toDF("block", "id")
     val capped = Skew.capBlocks(df, $"block", $"id", maxPerBlock = 30)
     val planned = capped.queryExecution.sparkPlan.toString
-    assert(!planned.contains("Join") && !planned.contains("Window"),
-      s"no-over-cap capBlocks must be join- and window-free:\n$planned")
-    val sizes = capped.groupBy("__capped_block").count().collect()
-      .map(r => (r.getString(0), r.getLong(1))).toMap
+    assert(!planned.contains("Join"), s"capBlocks must be join-free:\n$planned")
+    val sizes = subBlockSizes(capped)
     assert(sizes.keys.forall(_.endsWith("#0")) && sizes.values.sum == 50L)
   }
 
@@ -203,34 +170,25 @@ class SkewSpec extends AnyFunSuite {
     assert(err.getMessage.contains("integral"))
   }
 
-  test("capBlocksHashed modes are row-identical (pay-per-use vs mostBlocksOver)") {
-    // mixed profile on purpose: over-cap, exactly-at-cap, tiny, and
-    // null blocks — the all-blocks-joined plan must reproduce the
-    // split plan's assignment everywhere, including the under-cap
-    // blocks it routes through the hash arithmetic (nSub = 1 -> "#0")
-    val rows = (1 to 75).map(i => (Some("hot"), i.toLong * 8)) ++
-      (1 to 30).map(i => (Some("edge"), (1000 + i).toLong)) ++
-      Seq((Some("tiny"), 2000L), (None: Option[String], 2001L), (None, 2002L))
-    val df = rows.toDF("block", "id")
-    def dump(mode: Option[Boolean]) =
-      Skew.capBlocksHashed(df, $"block", $"id", maxPerBlock = 30, mostBlocksOver = mode)
-        .select("block", "id", "__capped_block").collect()
-        .map(r => (Option(r.getString(0)), r.getLong(1), r.getString(2)))
-        .sortBy(t => (t._1.getOrElse(""), t._2)).toSeq
-    assert(dump(Some(false)) == dump(Some(true)))
-    assert(dump(None) == dump(Some(true)))
+  test("capBlocksHashed assigns hashed sub-blocks on the mixed fixture") {
+    // hot 75 -> ceil(75/30) = 3 hashed sub-blocks (sizes from the
+    // portable replay of stride-8 ids); blocks at or under the cap
+    // scale to "#0" by arithmetic (nSub = 1)
+    val capped = Skew.capBlocksHashed(mixed(_.toLong * 8, 1000L, 2000L), $"block", $"id",
+      maxPerBlock = 30)
+    assert(subBlockSizes(capped) == Map("hot#0" -> 24L, "hot#1" -> 24L,
+      "hot#2" -> 27L, "edge#0" -> 30L, "tiny#0" -> 1L, "__null_block__#0" -> 2L))
   }
 
-  test("capBlocksHashed mostBlocksOver plans one join and no union/sort/window") {
-    // the profile's point: no anti/semi split (three scans + a union)
-    // when the caller knows most blocks exceed the cap — just counts
-    // joined on. Still sort-free like the split plan.
+  test("capBlocksHashed plans one join and no union/sort/window") {
+    // per-block counts joined onto every row: no split, no union, and
+    // — unlike the rank window — no sort
     val df = (1 to 100).map(i => ("giant", i.toLong)).toDF("block", "id")
-    val planned = Skew.capBlocksHashed(df, $"block", $"id", maxPerBlock = 30,
-      mostBlocksOver = Some(true)).queryExecution.sparkPlan.toString
+    val planned = Skew.capBlocksHashed(df, $"block", $"id", maxPerBlock = 30)
+      .queryExecution.sparkPlan.toString
     assert(!planned.contains("Union") && !planned.contains("Window") &&
       !planned.contains("Sort"),
-      s"mostBlocksOver hashed plan must be split-free and sort-free:\n$planned")
+      s"hashed plan must be split-free and sort-free:\n$planned")
     assert(planned.contains("Join"), s"counts must join onto the rows:\n$planned")
   }
 
