@@ -7,7 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * A warmup pass at sf0.001 (disable with SPARK_GRAFT_WARMUP=0) runs
   * every query once so JIT + whole-stage-codegen compilation doesn't
   * land in the measured numbers — first-run skew was up to 10x on the
-  * codegen-heavy operators (see TimeQ).
+  * codegen-heavy operators. Warm per-query timings of a few queries:
+  * SPARK_GRAFT_ONLY=q50_…,q18_… with SPARK_GRAFT_ITERS.
   *
   * Queries are executed through the `noop` sink, not `count()`: a
   * count() over a projection-only plan prunes every expression (and on

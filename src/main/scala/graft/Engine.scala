@@ -406,7 +406,7 @@ object Engine {
       val cached = bssStageCache.get(path)
       if (cached != null && complete(cached)) cached
       else {
-        val (_, dir) = graft.operators.Scratch.newDir(spark, s"graft-bss-$name")
+        val dir = graft.operators.Scratch.newDir(spark, s"graft-bss-$name")
         val key = "spark.sql.parquet.enableVectorizedReader"
         val prior = spark.conf.get(key)
         spark.conf.set(key, "false")

@@ -9,8 +9,8 @@ object Verify {
     // optional extra args: restrict to these queries (local iteration)
     val only = args.drop(2).toSet
     // a typo'd name silently dropping a query would make the compare
-    // "pass" by absence — fail the run instead (same guard as TimeQ
-    // and Bench's SPARK_GRAFT_ONLY)
+    // "pass" by absence — fail the run instead (same guard as
+    // Bench's SPARK_GRAFT_ONLY)
     val unknown = only -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")

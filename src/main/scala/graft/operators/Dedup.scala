@@ -519,8 +519,9 @@ object Dedup {
     * distributed machinery entirely and is closed on the driver in one
     * pass (the daily-ingest root-graph and medium-corpus shape).
     *
-    * Iteration state (label map + contracted edges) is MATERIALIZED to
-    * parquet each round — the standard checkpoint pattern for
+    * Iteration state (label map + contracted edges) is staged through
+    * [[Scratch]] each round (contracted-edge sizes from the staged
+    * footers) — the standard checkpoint pattern for
     * iterative graph algorithms. Neither cache() nor localCheckpoint
     * works here: cache keeps the logical plan, whose self-joining tree
     * doubles per round (OOMs the driver just printing it), and
@@ -547,29 +548,6 @@ object Dedup {
         s"connectedComponents needs integral id columns; '$c' is ${dt.simpleString}. " +
           "Hash or cast ids to long before clustering.")
     }
-    // scratch space for per-round materialization — see [[Scratch]]
-    // for the placement (checkpoint FS) and lifetime (JVM-exit hook /
-    // harness releaseAll) story
-    val (ckFs, ckDir) = Scratch.newDir(spark, "graft-cc")
-    def materialize(df: DataFrame, name: String): DataFrame = {
-      df.write.option("compression", Scratch.Codec)
-        .mode("overwrite").parquet(s"$ckDir/$name")
-      spark.read.parquet(s"$ckDir/$name")
-    }
-    // row count of a staged table straight from the parquet footers —
-    // a driver-side metadata read, no Spark job (a count() job over the
-    // big-graph pair set measured ~0.4 s of pure overhead per CC call)
-    def stagedCount(name: String): Long = {
-      val conf = spark.sparkContext.hadoopConfiguration
-      ckFs.listStatus(new org.apache.hadoop.fs.Path(s"$ckDir/$name"))
-        .iterator
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .map { f =>
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf))
-          try r.getRecordCount finally r.close()
-        }.sum
-    }
     // The upstream pair generation (LSH) must run exactly ONCE: the
     // edge list is consumed by round-0 hook (twice, once per vertex
     // role) and round-0 contract, so leaving `pairs` lazy executes the
@@ -593,10 +571,10 @@ object Dedup {
     val cA = col("id_a").cast("long")
     val cB = col("id_b").cast("long")
     val flip = cB < cA
-    val pairs0 = materialize(
+    val (pairs0, nInput) = Scratch.stageCounted(
       pairs.select(when(flip, cB).otherwise(cA).as("src"),
         when(flip, cA).otherwise(cB).as("dst")),
-      "pairs0")
+      "graft-cc-pairs0")
 
     // Small-graph fast path: the driver union-find finish exists for
     // residual graphs under `driverFinishMaxEdges` — when the INPUT
@@ -607,7 +585,6 @@ object Dedup {
     // driver pass. Close it exactly on the driver now. The count is
     // metadata-only on the freshly staged parquet; the collect is the
     // same <=32 MB size class the residual finish already accepts.
-    val nInput = stagedCount("pairs0")
     if (nInput <= driverFinishMaxEdges) {
       val uf = new UnionFind(collectPackedEdges(pairs0))
       return uf.labelFrame(spark)
@@ -655,22 +632,23 @@ object Dedup {
     // cluster scale correctly plans as a shuffle join. Staging hook's
     // output also runs the 2|E|-row aggregation ONCE — the old
     // jump(hook(...)) self-join re-derived it per join side.
-    val h0 = materialize(hook(pairs0), "h0")
-    val map0 = materialize(jump(h0), "map0") // vertex -> label
+    val h0 = Scratch.stage(hook(pairs0), "graft-cc-h0")
+    val map0 = Scratch.stage(jump(h0), "graft-cc-map0") // vertex -> label
     var mapping = map0
-    var rep = materialize(contract(pairs0, map0), "rep0")
-    var repSize = stagedCount("rep0") // footers, not a count() job
+    // rep sizes come from the staged footers, not a count() job
+    var (rep, repSize) = Scratch.stageCounted(contract(pairs0, map0), "graft-cc-rep0")
     var iter = 0
     while (repSize > driverFinishMaxEdges && iter < maxIter) {
-      val h = materialize(hook(rep), s"h${iter + 1}")
-      val b = materialize(jump(h), s"b${iter + 1}")
-      mapping = materialize(mapping
+      val h = Scratch.stage(hook(rep), s"graft-cc-h${iter + 1}")
+      val b = Scratch.stage(jump(h), s"graft-cc-b${iter + 1}")
+      mapping = Scratch.stage(mapping
         .join(b.select(col("id").as("cluster_id"), col("cluster_id").as("nl")),
           Seq("cluster_id"), "left")
         .select(col("id"), coalesce(col("nl"), col("cluster_id")).as("cluster_id")),
-        s"map${iter + 1}")
-      rep = materialize(contract(rep, b), s"rep${iter + 1}")
-      repSize = stagedCount(s"rep${iter + 1}") // footers, not a count() job
+        s"graft-cc-map${iter + 1}")
+      val (r, n) = Scratch.stageCounted(contract(rep, b), s"graft-cc-rep${iter + 1}")
+      rep = r
+      repSize = n
       iter += 1
     }
     // close the residual graph exactly on the driver. rep is CANONICAL

@@ -2,7 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sources.{Lake, ParquetWarehouse}
+import graft.operators.Scratch
+import graft.sources.ParquetWarehouse
 import graft.stages._
 
 /** Orchestration replacing the reference's Airflow DAG within scope:
@@ -12,7 +13,12 @@ import graft.stages._
   *
   * In-memory chaining (one SparkSession, stages fused by Catalyst) is
   * the default; `materialize = true` reproduces the reference's
-  * stage-per-process restartability contract.
+  * stage-per-process restartability contract: each stage lands in the
+  * lake at `lakeRoot/<stage>` partitioned by `source` (each DAG task is
+  * a fresh spark-submit reading the previous stage's directory) and is
+  * read back through [[Scratch.writeBack]] — by its written schema, so
+  * the stage's one Spark job is its write; the presence check counts
+  * the written footers.
   */
 class JobPipeline(spark: SparkSession, lakeRoot: String,
     clock: Option[java.sql.Timestamp] = None) {
@@ -20,10 +26,8 @@ class JobPipeline(spark: SparkSession, lakeRoot: String,
   private def checkpoint(df: DataFrame, name: String, materialize: Boolean): DataFrame =
     if (!materialize) df
     else {
-      val path = s"$lakeRoot/$name"
-      Lake.writeStage(df, path)
-      val back = Lake.readStage(spark, path)
-      require(back.take(1).nonEmpty, s"stage $name produced no rows")
+      val back = Scratch.writeBack(df, s"$lakeRoot/$name")(_.partitionBy("source"))
+      require(Scratch.footerCount(back) > 0, s"stage $name produced no rows")
       back
     }
 

@@ -99,9 +99,9 @@ object CvOps {
 
     // land the envelopes, then run the REAL streaming leg to a
     // partitioned checkpointed parquet sink (AvailableNow)
-    val (_, inDir) = graft.operators.Scratch.newDir(s, "graft-cv-in")
-    val (_, outDir) = graft.operators.Scratch.newDir(s, "graft-cv-out")
-    val (_, chkDir) = graft.operators.Scratch.newDir(s, "graft-cv-chk")
+    val inDir = graft.operators.Scratch.newDir(s, "graft-cv-in")
+    val outDir = graft.operators.Scratch.newDir(s, "graft-cv-out")
+    val chkDir = graft.operators.Scratch.newDir(s, "graft-cv-chk")
     base.select(envelope.as("value")).coalesce(4)
       .write.mode("overwrite").text(inDir.toString)
     CvIngest.ingestFiles(s, inDir.toString, outDir.toString, chkDir.toString,

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Pluggable warehouse sink. The reference writes BigQuery tables
   * (date-partitioned + clustered, load_to_bigquery.py:257-307,
@@ -45,15 +45,4 @@ object BucketedWarehouse {
       .sortBy(bucketCol)
       .format("parquet")
       .saveAsTable(table)
-}
-
-/** Lake-stage IO: every batch stage materializes partitioned parquet
-  * between stages (the reference's restartability contract — each DAG
-  * task is a fresh spark-submit reading the previous stage's directory). */
-object Lake {
-  def writeStage(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").partitionBy("source").parquet(path)
-
-  def readStage(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 }

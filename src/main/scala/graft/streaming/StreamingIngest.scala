@@ -224,7 +224,7 @@ object StreamingIngest {
     // per-query failures and keep going in the same session)
     if (outputMode == "append") {
       // scratch parquet sink: executor-side row path, driver-free
-      val (_, dir) = graft.operators.Scratch.newDir(spark, namePrefix + "sink")
+      val dir = graft.operators.Scratch.newDir(spark, namePrefix + "sink")
       var q: org.apache.spark.sql.streaming.StreamingQuery = null
       try {
         q = agg.writeStream

@@ -241,30 +241,88 @@ class OperatorsSpec extends AnyFunSuite {
     assert(stagedEmpty.count() == 0L)
   }
 
-  test("footerCount fails loudly on a nested (partitioned) staged layout") {
-    // round-16 ADVICE: a future partitionBy'd stage would make the
-    // non-recursive footer listing UNDERCOUNT and silently weaken the
-    // scale guards' cross-product short-circuit — it must throw by name
+  test("footerCount is exact on a partitioned layout") {
+    // the count walks the read-back's own file index, which recurses
+    // into partition dirs — a partitioned layout (the lake stages)
+    // counts every leaf, never undercounting the scale guards' bound
     val dir = new java.io.File(
       System.getProperty("java.io.tmpdir"),
       s"graft-test-nested-${java.util.UUID.randomUUID()}")
     try {
       spark.range(100).toDF("id").withColumn("p", $"id" % 2)
         .write.partitionBy("p").parquet(dir.toString)
-      val p = new org.apache.hadoop.fs.Path(dir.toString)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val e = intercept[IllegalArgumentException] {
-        Scratch.footerCount(fs, fs.makeQualified(p),
-          spark.sparkContext.hadoopConfiguration)
-      }
-      assert(e.getMessage.contains("subdirectories"))
-      assert(e.getMessage.contains("UNDERCOUNT"))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(dir)
+      assert(Scratch.footerCount(spark.read.parquet(dir.toString)) == 100L)
+    } finally rm(dir)
+  }
+
+  private def rm(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
+    f.delete()
+  }
+
+  private def jobsDuring(f: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
     }
+    spark.sparkContext.addSparkListener(l)
+    try { f; Thread.sleep(500) } finally spark.sparkContext.removeSparkListener(l)
+    n.get()
+  }
+
+  test("a Scratch staging runs exactly one Spark job: the write") {
+    // the read-back carries the written schema, so no schema-inference
+    // job follows the write; stageCounted's count is footer metadata
+    val df = spark.range(100).toDF("id")
+    assert(jobsDuring { Scratch.stage(df, "graft-test-one-job") } == 1)
+    assert(jobsDuring { Scratch.stageCounted(df, "graft-test-one-job") } == 1)
+  }
+
+  // every parquet shape the schema-carrying read must agree with
+  // inference on: nested array/struct/map, decimal, both timestamp
+  // kinds, binary, and a non-nullable column (range's id)
+  private def richFrame = spark.range(3).select(
+    $"id",
+    array($"id", $"id" + 1).as("arr"),
+    struct($"id".as("a"), array(struct($"id".as("b"))).as("nested")).as("st"),
+    map($"id".cast("string"), array($"id")).as("mp"),
+    ($"id" / 7).cast("decimal(12,4)").as("dec"),
+    timestamp_seconds($"id").as("ts"),
+    timestamp_seconds($"id").cast("timestamp_ntz").as("ts_ntz"),
+    $"id".cast("string").cast("binary").as("bin"),
+    when($"id" % 2 === 0, "even").otherwise("odd").as("source"),
+    lit(1.5).as("tail"))
+
+  test("a Scratch read-back has the schema an inferred read would give") {
+    val df = richFrame
+    assert(df.schema("id").nullable == false, "fixture needs a non-nullable column")
+    val back = Scratch.stage(df, "graft-test-schema")
+    val dir = new org.apache.hadoop.fs.Path(new java.net.URI(back.inputFiles.head))
+      .getParent.toString
+    assert(back.schema == spark.read.parquet(dir).schema)
+    assert(back.collect().toSet == spark.read.parquet(dir).collect().toSet)
+  }
+
+  test("a partitioned read-back matches the inferred read, partition column last") {
+    // the lake-stage shape (JobPipeline's materialized checkpoint):
+    // write, schema-carrying read-back and footer count run one job
+    val dir = new java.io.File(
+      System.getProperty("java.io.tmpdir"),
+      s"graft-test-lake-${java.util.UUID.randomUUID()}")
+    try {
+      var back: org.apache.spark.sql.DataFrame = null
+      var rows = -1L
+      val jobs = jobsDuring {
+        back = Scratch.writeBack(richFrame, dir.toString)(_.partitionBy("source"))
+        rows = Scratch.footerCount(back)
+      }
+      assert(jobs == 1)
+      assert(rows == 3L)
+      val inferred = spark.read.parquet(dir.toString)
+      assert(back.schema == inferred.schema)
+      assert(back.columns.last == "source")
+      assert(back.collect().toSet == inferred.collect().toSet)
+    } finally rm(dir)
   }
 }

@@ -209,4 +209,15 @@ class StagesSpec extends AnyFunSuite {
     val fact = spark.read.parquet(s"$tmp/warehouse/Fact_OffresEmploi")
     assert(fact.count() == 1)
   }
+
+  test("a materialized stage that produces no rows fails by name") {
+    // an empty partitionBy write leaves only _SUCCESS; the presence
+    // check must name the stage, not die inferring a schema from no files
+    val tmp = java.nio.file.Files.createTempDirectory("graft-lake").toString
+    val pipeline = new graft.pipeline.JobPipeline(spark, tmp, clock)
+    val e = intercept[IllegalArgumentException] {
+      pipeline.enrich(Seq.empty[String].toDF("value"), materialize = true)
+    }
+    assert(e.getMessage.contains("stage jobs_parsed produced no rows"))
+  }
 }
