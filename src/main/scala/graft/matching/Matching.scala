@@ -30,13 +30,14 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: the naive form is a cross join (offers x CVs = the
   * 100 TB killer). We block on candidate sector OR desired location —
-  * two equi-joins over the full attribute rows, each shuffling only on
-  * its block key. The candidate set is duplicate-free BY CONSTRUCTION:
-  * the location join drops every pair whose sector blocks already
-  * match, so a pair the sector join emits is never emitted again, and
-  * the union needs no pair-id dedup shuffle and no attribute join-back
-  * (the same prune-before-merge idea as `Dedup.minhashLshPairs`'
-  * first-band-wins). Scoring is pure Column math inside the join tasks.
+  * one equi-join over the full attribute rows exploded per key
+  * ([[graft.operators.Blocking]], shared with both MinHash-LSH pair
+  * operators), shuffling only on (key index, key). The candidate set is
+  * duplicate-free BY CONSTRUCTION: a pair is emitted only at its first
+  * equal (sub-)block key, so a pair the sector key emits is never
+  * emitted again by the location key, and no pair-id dedup shuffle or
+  * attribute join-back is needed. Scoring is pure Column math inside
+  * the join tasks.
   */
 object Matching {
 
@@ -105,8 +106,8 @@ object Matching {
     * `maxBlockSize` is the skew dial for degenerate blocks (every
     * unclassified offer lands in SECT_INCONNU, every unlocated CV in
     * LOC_COTE_DIVOIRE — the dirtiest data concentrates in exactly the
-    * blocks that explode quadratically): each side of each blocked join
-    * is split into sub-blocks of at most `maxBlockSize` rows
+    * blocks that explode quadratically): each side is split, per
+    * blocking key, into sub-blocks of at most `maxBlockSize` rows
     * ([[graft.operators.Skew.capBlocks]]) and only same-index sub-blocks
     * pair, bounding any block's work at O(subBlocks * maxBlockSize^2)
     * instead of O(|offers_block| * |cvs_block|). Cross-sub-block pairs
@@ -181,10 +182,11 @@ object Matching {
       "hashedSubBlocks picks the sub-block assignment UNDER maxBlockSize — " +
         "asking for it without a cap would silently run the exact uncapped path")
     // Both sides are STAGED to scratch parquet (one eager write job
-    // each, at call time): each feeds TWO block joins, and the CV
-    // side's lineage is typically a multi-join skill-profile build
-    // (orders⋈lineitem⋈part + explode + collect_set in the q50 shape)
-    // that must not run twice.
+    // each, at call time): each feeds the scale guard (footer row
+    // counts, and per-block counts past the bound) and the blocked
+    // join, and the CV side's lineage is typically a multi-join
+    // skill-profile build (orders⋈lineitem⋈part + explode + collect_set
+    // in the q50 shape) that must not run twice.
     // Staging beats persist() here — the round-3 verdict measured the
     // cache fill of the wide-array profile at ~4x the whole warm query
     // on first run, and the two MEMORY_AND_DISK pins outlived the call
@@ -265,46 +267,17 @@ object Matching {
       }
     }
 
-    // Adds `as`, the side's block key for one blocking: the raw `key`
-    // without a cap; under the cap the sub-block key "<block>#<i>"
-    // (so sub-block equality still implies block equality and
-    // same-index pairing), null wherever `key` is null. One path for
-    // both modes: the joins below only ever compare `as` columns.
-    def blockKey(side: DataFrame, key: String, id: String, as: String): DataFrame =
-      maxBlockSize match {
-        case None => side.withColumn(as, col(key))
-        case Some(m) =>
-          val capped =
-            if (hashedSubBlocks) graft.operators.Skew.capBlocksHashed(side, col(key), col(id), m)
-            else graft.operators.Skew.capBlocks(side, col(key), col(id), m)
-          // capBlocks gives the null block its own sub-blocks (right for
-          // dedup-style callers); nulling the key here keeps the cap from
-          // inventing null×null pairs the uncapped equi-join excludes
-          // (MatchingSpec pins capped ⊆ exact; the q95/q101 oracles'
-          // NULL || '#' concat emits no null-block pairs). Blocks are
-          // capped independently, so the null block's rows shift no
-          // other block's sub-block index.
-          capped.withColumn(as, when(col(key).isNotNull, col("__capped_block")))
-            .drop("__capped_block")
-      }
-
-    // Duplicate-free candidate generation: the sector join emits every
-    // same-sector-block pair; the location join emits a same-location-
-    // block pair only when its sector blocks do NOT match (coalesce:
-    // a null sector on either side never matched, so the pair is the
-    // location join's to emit). Each pair thus comes from exactly one
-    // join, and both carry the full attribute rows into scoring. The
-    // location keys are derived over the sector-keyed sides, which
-    // carry o_sb/c_sb along; capping sees the same rows per block
-    // either way, so the sub-block assignment is unchanged.
-    val oSect = blockKey(o, "o_sect", "job_id", "o_sb")
-    val cSect = blockKey(c, "c_sect", "candidate_id", "c_sb")
-    val bySector = oSect.join(cSect, col("o_sb") === col("c_sb"))
-    val byLocation = blockKey(oSect, "o_loc", "job_id", "o_lb")
-      .join(blockKey(cSect, "c_loc", "candidate_id", "c_lb"),
-        col("o_lb") === col("c_lb") && !coalesce(col("o_sb") === col("c_sb"), lit(false)))
-      .drop("o_lb", "c_lb")
-    val candidates = bySector.unionByName(byLocation)
+    // Duplicate-free candidate generation (graft.operators.Blocking):
+    // a pair is emitted at its first equal (sub-)block key, sector
+    // before location, so a pair both blockings share comes once, from
+    // the sector key. Capping splits each key on the un-exploded side
+    // rows, so sub-block assignment is per key, as the q95/q101 oracles
+    // replay; null keys never pair. The full attribute rows ride through
+    // the one join into scoring.
+    val candidates = graft.operators.Blocking.pairs(
+      o, "job_id", Seq(col("o_sect"), col("o_loc")),
+      c, "candidate_id", Seq(col("c_sect"), col("c_loc")),
+      maxBlockSize, hashedSubBlocks)
 
     // c_comp is staged ALREADY distinct (above) and the experience
     // band is staged per offer (o_lo/o_hi), so the scoring projection

@@ -11,12 +11,13 @@ import graft.functions.TextFunctions._
   * Scale design (100 TB): every operator is blocking-based — no global
   * O(n^2). Exact dedup is one hash shuffle on the digest. MinHash-LSH
   * shuffles once on (band index, band key) so only same-bucket rows
-  * meet; candidate verification re-joins token sets on the candidate
-  * pair ids (two broadcast-able or shuffle equi-joins). SimHash is an
-  * explode + map-side-combined sum per (doc, bit). Skewed buckets
-  * (e.g. boilerplate-heavy corpora) split under AQE skew-join handling;
-  * pathological buckets can additionally be capped upstream by salting
-  * the band key with a within-bucket row bucket.
+  * meet ([[Blocking]]); candidate verification reads the token sets
+  * (or their bitmaps) carried through that join, with no join-back.
+  * SimHash is an explode + map-side-combined sum per (doc, bit). Skewed
+  * buckets (e.g. boilerplate-heavy corpora) split under AQE skew-join
+  * handling; pathological buckets can additionally be capped: an id
+  * rank window per band key splits each bucket into sub-buckets of at
+  * most `maxBucketSize` rows ([[Skew.capBlocks]]).
   */
 /** Physical token-set encoding for [[Dedup.minhashLshPairs]]'
   * candidate-verification stage. The choice is purely physical — all
@@ -90,7 +91,20 @@ object Dedup {
   // ---- shared LSH banding machinery: the self-join
   // ([[minhashLshPairs]]) and incremental ([[incrementalLshPairs]])
   // paths must emit IDENTICAL candidate sets, so the token prep, band
-  // keys, and first-band-wins condition are defined exactly once ----
+  // keys and parameter checks are defined exactly once here, and the
+  // first-band-wins pairing once in [[Blocking]] ----
+
+  /** The band count k / bandsOf, after the preconditions both pair
+    * operators share. */
+  private def bandCount(k: Int, bandsOf: Int, threshold: Double): Int = {
+    require(k > 0 && bandsOf > 0, s"k and bandsOf must be positive, got k=$k, bandsOf=$bandsOf")
+    require(k % bandsOf == 0, "k must divide into bands evenly")
+    // the degenerate-doc prune in lshToks is output-neutral only for a
+    // positive threshold (empty-vs-empty token sets score 0.0, which a
+    // t = 0.0 caller would have kept) — enforce the precondition
+    require(threshold > 0, "threshold must be > 0 (no-token docs are pruned before banding)")
+    k / bandsOf
+  }
 
   /** id + sorted distinct mod-P token hashes. Hash each distinct token
     * ONCE; signatures and the verification Jaccard both work over the
@@ -134,24 +148,25 @@ object Dedup {
         transform(tokenSet(col("__text")), t => tokenHashMod(t)))).as("toks"))
 
   /** The nBands band-key strings of a k-long `sig` column. */
-  private def bandKeys(sig: Column, nBands: Int, bandsOf: Int): Column =
-    array((0 until nBands).map { b =>
+  private def bandKeys(sig: Column, nBands: Int, bandsOf: Int): Seq[Column] =
+    (0 until nBands).map { b =>
       concat_ws("_", (0 until bandsOf).map(r =>
         element_at(sig, b * bandsOf + r + 1).cast("string")): _*)
-    }: _*)
+    }
 
-  /** FIRST-BAND-WINS pair-dedup condition over `sig_a`/`sig_b`/
-    * `band_idx`: true iff the pair already matched at a lower band.
-    * Slice-equality form: a compact expression tree — the fully
-    * unrolled element_at variant bloated the join-condition codegen
-    * enough to cost ~1 µs/probe; array-slice equality is ~5x cheaper. */
-  private def sharedEarlierBand(nBands: Int, bandsOf: Int): Column = {
-    def bandEq(b: Int): Column =
-      slice(col("sig_a"), b * bandsOf + 1, bandsOf) ===
-        slice(col("sig_b"), b * bandsOf + 1, bandsOf)
-    (1 until nBands).map { bi =>
-      col("band_idx") === bi && (0 until bi).map(bandEq).reduce(_ || _)
-    }.reduceOption(_ || _).getOrElse(lit(false))
+  /** Band-sharing candidate pairs of two (id, sig, `carried`…) frames,
+    * one [[Blocking]] construction over their nBands band keys: each
+    * pair once, at its first band whose (capped) keys match. Columns
+    * come back suffixed `_a` / `_b`; the caller orients or excludes
+    * self-pairs. */
+  private def bandPairs(a: DataFrame, b: DataFrame, nBands: Int, bandsOf: Int,
+      carried: Seq[String], maxBucketSize: Option[Int]): DataFrame = {
+    def side(df: DataFrame, s: String) =
+      df.select((Seq("id", "sig") ++ carried).map(c => col(c).as(s"${c}_$s")): _*)
+    Blocking.pairs(
+      side(a, "a"), "id_a", bandKeys(col("sig_a"), nBands, bandsOf),
+      side(b, "b"), "id_b", bandKeys(col("sig_b"), nBands, bandsOf),
+      maxBucketSize)
   }
 
   /** MinHash-LSH near-duplicate pairs.
@@ -172,14 +187,14 @@ object Dedup {
     * O(bucket^2) comparisons. With a cap, each bucket is split by
     * deterministic id rank into sub-buckets of at most that size
     * ([[Skew.capBlocks]]) that only pair among themselves, bounding the
-    * worst bucket at cap^2 comparisons. The output is a strict SUBSET
-    * of the exact output (pairs split across sub-buckets are missed;
-    * nothing is added or duplicated — a pair suppressed in an earlier
-    * band's sub-bucketing is also suppressed at later shared bands by
-    * the first-band-wins condition, which compares signature slices,
-    * not emitted pairs). Default None = exact. The cap is one rank
-    * window over every bucket; on the gate corpus (q103) most banded
-    * rows sit in over-cap buckets (72.9 % at sf0.01, 88.7 % at sf0.1).
+    * worst bucket at cap^2 comparisons. The output is the distinct
+    * union of the capped band joins, a SUBSET of the exact output: a
+    * pair is missed only when every band it shares splits it across
+    * sub-buckets; nothing is added or duplicated, because a pair is
+    * emitted at its first band whose CAPPED keys match ([[Blocking]]).
+    * Default None = exact. The cap is one rank window per band over
+    * every bucket; on the gate corpus (q103) most banded rows sit in
+    * over-cap buckets (72.9 % at sf0.01, 88.7 % at sf0.1).
     *
     * `candidateBudget` is the SCALE GUARD on the UNCAPPED path
     * (round-15 verdict item 1): on boilerplate vocabularies band
@@ -270,11 +285,7 @@ object Dedup {
       maxBucketSize: Option[Int] = None,
       candidateBudget: Option[Long] = Some(DefaultCandidateBudget),
       wallBudgetSeconds: Option[Double] = Some(DefaultWallBudgetSeconds)): DataFrame = {
-    require(k % bandsOf == 0, "k must divide into bands evenly")
-    // the degenerate-doc prune in lshToks is output-neutral only for a
-    // positive threshold (empty-vs-empty token sets score 0.0, which a
-    // t = 0.0 caller would have kept) — enforce the precondition
-    require(threshold > 0, "threshold must be > 0 (no-token docs are pruned before banding)")
+    val nBands = bandCount(k, bandsOf, threshold)
     // SCALE GUARD (uncapped path only). Cross-product short-circuit
     // first (round-16 verdict item 3): within one band the buckets
     // PARTITION the <=n banded rows, so Σ C(bucket,2) <= C(n,2) per
@@ -290,7 +301,7 @@ object Dedup {
     if (maxBucketSize.isEmpty) effectivePairBudget(candidateBudget,
         wallBudgetSeconds, encoding.nanosPerCandidate).foreach { budget =>
       val n = BigInt(df.count())
-      ScaleGuard.enforce(budget, BigInt(k / bandsOf) * n * (n - 1) / 2,
+      ScaleGuard.enforce(budget, BigInt(nBands) * n * (n - 1) / 2,
         bandBucketSizes(df, idCol, textCol, k, bandsOf)
           .select(col("band_idx"), col("band_key"),
             expr("size * (size - 1) div 2").as("__pairs")),
@@ -315,13 +326,11 @@ object Dedup {
     val toksRaw = lshToks(df, idCol, textCol)
     val sigsRaw = toksRaw.select(col("id"), col("toks"),
       minhashFromHashes(col("toks"), k).as("sig"))
-    // The plan consumes the tokenize/minhash cascade four ways (two
-    // band-join sides + two verify join-backs) and ReuseExchange
-    // cannot dedupe them: column pruning pushes a DIFFERENT projection
-    // below each branch's repartition, so the exchanges never
-    // canonicalize equal (measured, SCALE.md round-8).
-    // Staging the cascade to scratch ONCE at call time turns every
-    // consumer into a cheap parquet scan. Done under a cap only; the
+    // Staging the tokenize/minhash cascade to scratch ONCE at call time
+    // turns every consumer (both band-join sides, Auto's probe) into a
+    // cheap parquet scan; SCALE.md round-8 measured it when two verify
+    // join-backs were consumers too, whose differently-pruned
+    // projections ReuseExchange could not dedupe. Done under a cap only; the
     // uncapped path stays lazy because staging lost on the short-text
     // gate corpus (q49 4.27 -> 5.38 s, q53 noise; SCALE.md round 8),
     // though heavy text inverted the trade (BucketCapProbe's long
@@ -331,63 +340,29 @@ object Dedup {
       if (staged) graft.Engine.spread(Scratch.stage(sigsRaw, "graft-lsh-sigs"))
       else sigsRaw
     val toks = if (staged) sigs.select(col("id"), col("toks")) else toksRaw
-    val nBands = k / bandsOf
 
-    // Candidate generation: one shuffle on (band index, band key); rows
-    // carry the k-long signature so pair de-duplication is FIRST-BAND-
-    // WINS — a pair is emitted only at the lowest shared band (band
-    // slices of the two signatures compared in the join condition),
-    // which deletes the quadratic-size distinct shuffle the naive plan
-    // needs. On dense corpora (boilerplate/template-heavy) candidates
-    // approach all-pairs and that distinct dominated the whole operator.
-    // Probe-side parallelism (the pair join's work is quadratic in
-    // bucket sizes while a scan's parallelism is whatever the file
-    // split produced): the UNSTAGED path is spread inside lshToks —
-    // BEFORE the cascade projection, so the tokenize/minhash work runs
-    // post-exchange at full width — and the STAGED path is spread right
-    // after the scratch read above. A second spread here would
-    // re-shuffle the much wider cascade output for nothing.
-    def bandsFrom(pre: DataFrame, extra: Seq[String]): DataFrame = {
-      val banded = pre
-        .select(
-        (Seq(col("id"), col("sig")) ++ extra.map(col) :+
-          posexplode(bandKeys(col("sig"), nBands, bandsOf))
-            .as(Seq("band_idx", "band_key"))): _*)
-      // optional hot-bucket cap: rewrite band_key to its capped
-      // sub-bucket (id-ranked within the original (band, key) bucket)
-      // so the join machinery below is untouched; band_idx rides along
-      // for the first-band-wins condition as before
-      maxBucketSize match {
-        case Some(m) =>
-          Skew.capBlocks(banded,
-              concat_ws("|", col("band_idx"), col("band_key")),
-              col("id"), m)
-            .withColumn("band_key", col("__capped_block"))
-            .drop("__capped_block")
-        case None => banded
-      }
-    }
-    def sideCols(side: String, extra: Seq[String]) =
-      Seq(col("band_idx"), col("band_key"), col("id").as(s"id_$side"),
-        col("sig").as(s"sig_$side")) ++
-        extra.map(c => col(c).as(s"${c}_$side"))
-    val dupBand = sharedEarlierBand(nBands, bandsOf)
-
+    // Candidate generation ([[bandPairs]]): one shuffle on (band
+    // index, band key), each pair emitted only at its first band whose
+    // (capped) keys match, so no quadratic-size distinct shuffle is
+    // needed (on dense, template-heavy corpora candidates approach
+    // all-pairs and that distinct dominated the whole operator).
+    // Probe-side parallelism comes from
+    // the spread inside lshToks (unstaged) or after the scratch read
+    // (staged); a second spread here would re-shuffle the much wider
+    // cascade output for nothing.
+    //
     // Verification encoding is chosen from corpus statistics (the
     // adaptive-engine move: one cheap partial-agg pass decides the
     // physical set representation). A small distinct-token universe
     // dictionary-encodes each token SET into a few machine words
     // carried INLINE through the band join (per-candidate Jaccard = two
-    // popcounts, zero follow-up joins); open-vocabulary corpora keep
-    // narrow band rows and join the sorted token arrays back by id for
-    // the merge-walk Jaccard (AQE picks broadcast vs shuffle there).
-    def candidates(pre: DataFrame, maskCols: Seq[String]): DataFrame = {
-      val bands = bandsFrom(pre, maskCols)
-      bands.select(sideCols("a", maskCols): _*)
-        .join(bands.select(sideCols("b", maskCols): _*),
-          Seq("band_idx", "band_key"))
-        .where(col("id_a") < col("id_b") && !dupBand)
-    }
+    // popcounts); open-vocabulary corpora carry the sorted token arrays
+    // inline the same way for the merge-walk Jaccard — on the short-doc
+    // gate corpus that read no slower than joining them back by id
+    // (q56/q62/q103, SCALE.md round 22).
+    def candidates(pre: DataFrame, carried: Seq[String]): DataFrame =
+      bandPairs(pre, pre, nBands, bandsOf, carried, maxBucketSize)
+        .where(col("id_a") < col("id_b"))
     def scored(cand: DataFrame, jaccard: Column): DataFrame =
       cand.select(col("id_a"), col("id_b"),
           graft.queries.roundSafe(jaccard, 6).as("jaccard"))
@@ -419,10 +394,7 @@ object Dedup {
           graft.functions.ArrayOps.bitmapJaccard(col("mask_a"), col("mask_b")))
       }
     def mergeWalk: DataFrame =
-      scored(
-        candidates(sigs, Nil).select("id_a", "id_b")
-          .join(toks.select(col("id").as("id_a"), col("toks").as("toks_a")), "id_a")
-          .join(toks.select(col("id").as("id_b"), col("toks").as("toks_b")), "id_b"),
+      scored(candidates(sigs, Seq("toks")),
         graft.functions.ArrayOps.sortedJaccard(col("toks_a"), col("toks_b")))
 
     encoding match {
@@ -448,7 +420,7 @@ object Dedup {
     // partial agg all run in the post-exchange stage
     lshToks(df, idCol, textCol)
       .select(col("id"), minhashFromHashes(col("toks"), k).as("sig"))
-      .select(posexplode(bandKeys(col("sig"), k / bandsOf, bandsOf))
+      .select(posexplode(array(bandKeys(col("sig"), k / bandsOf, bandsOf): _*))
         .as(Seq("band_idx", "band_key")))
       .groupBy("band_idx", "band_key").agg(count(lit(1)).as("size"))
   }
@@ -879,33 +851,17 @@ object Dedup {
   def incrementalLshPairs(newDf: DataFrame, corpusDf: DataFrame,
       idCol: String, textCol: String,
       k: Int, bandsOf: Int, threshold: Double): DataFrame = {
-    require(k % bandsOf == 0, "k must divide into bands evenly")
-    // same precondition as minhashLshPairs: the degenerate-doc prune is
-    // output-neutral only when empty-set pairs (jaccard 0.0) cannot pass
-    require(threshold > 0, "threshold must be > 0 (no-token docs are pruned before banding)")
-    val nBands = k / bandsOf
+    val nBands = bandCount(k, bandsOf, threshold)
     // parallelism comes from lshToks' internal spread: the cascade,
-    // signature build and banding explode all run post-exchange
-    def bandsOfSide(toks: DataFrame, side: String): DataFrame =
-      toks
-        .select(col("id"), minhashFromHashes(col("toks"), k).as("sig"))
-        .select(
-          col("id").as(s"id_$side"), col("sig").as(s"sig_$side"),
-          posexplode(bandKeys(col("sig"), nBands, bandsOf))
-            .as(Seq("band_idx", "band_key")))
+    // signature build and banding explode all run post-exchange. The
+    // token arrays ride through the band join to the verify, so each
+    // side's cascade has one consumer and stays unstaged.
+    def sigsOf(df: DataFrame): DataFrame =
+      lshToks(df, idCol, textCol)
+        .select(col("id"), col("toks"), minhashFromHashes(col("toks"), k).as("sig"))
 
-    // each side's tokenize cascade feeds its band side AND its verify
-    // join-back (2 lazy derivations per side), unstaged: staging the
-    // (id, toks) arrays read slightly WORSE on the short-doc bench
-    // corpus at sf0.1 and sfg1 (r18 A/B, VERDICT.md round 18).
-    val newToks = lshToks(newDf, idCol, textCol)
-    val corpusToks = lshToks(corpusDf, idCol, textCol)
-    bandsOfSide(newToks, "a")
-      .join(bandsOfSide(corpusToks, "b"), Seq("band_idx", "band_key"))
-      .where(col("id_a") =!= col("id_b") && !sharedEarlierBand(nBands, bandsOf))
-      .select(col("id_a"), col("id_b"))
-      .join(newToks.select(col("id").as("id_a"), col("toks").as("toks_a")), "id_a")
-      .join(corpusToks.select(col("id").as("id_b"), col("toks").as("toks_b")), "id_b")
+    bandPairs(sigsOf(newDf), sigsOf(corpusDf), nBands, bandsOf, Seq("toks"), None)
+      .where(col("id_a") =!= col("id_b"))
       .select(col("id_a").as("new_id"), col("id_b").as("corpus_id"),
         graft.queries.roundSafe(
           graft.functions.ArrayOps.sortedJaccard(col("toks_a"), col("toks_b")), 6)
@@ -1019,11 +975,11 @@ object Dedup {
       .select(col("id"), col("block"), shingles(col("toks"), n).as("shs"))
       .select(col("id"), col("block"),
         sort_array(array_distinct(transform(col("shs"), s => tokenHash(s)))).as("sh")))
-    val a = prepped.select(col("block"), col("id").as("id_a"), col("sh").as("sh_a"))
-    val b = prepped.select(col("block"), col("id").as("id_b"), col("sh").as("sh_b"))
-    a.join(b, Seq("block"))
+    def side(s: String) = prepped.select(
+      Seq("block", "id", "sh").map(c => col(c).as(s"${c}_$s")): _*)
+    Blocking.pairs(side("a"), "id_a", Seq(col("block_a")), side("b"), "id_b", Seq(col("block_b")))
       .where(col("id_a") < col("id_b"))
-      .select(col("block"), col("id_a"), col("id_b"),
+      .select(col("block_a").as("block"), col("id_a"), col("id_b"),
         graft.queries.roundSafe(
           graft.functions.ArrayOps.sortedJaccard(col("sh_a"), col("sh_b")), 6)
           .as("jaccard"))

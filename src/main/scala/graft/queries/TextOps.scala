@@ -286,18 +286,17 @@ object TextOps {
   /** q18's banded LSH under the hot-bucket cap (`maxBucketSize` →
     * `Skew.capBlocks`) — the production dial for boilerplate-heavy
     * corpora, until now spec-tested (SkewSpec, round-7 BucketCapProbe
-    * curve) but never oracle-gated. The cap is a RECALL trade with two
-    * loss modes the oracle must replay exactly: (a) a pair capped into
-    * different rank sub-buckets of every shared band is never
-    * generated; (b) first-band-wins dedup tests raw SIGNATURE
-    * equality, so a pair split apart in its first shared band but
-    * co-bucketed in a later one is suppressed THERE too — the sub-wait
-    * emission belongs to the first shared band only. Sub-bucket =
+    * curve) but never oracle-gated. The cap is a RECALL trade with one
+    * loss mode the oracle replays exactly: a pair capped into different
+    * rank sub-buckets of every shared band is never generated. Every
+    * other pair is emitted once (at its first band whose CAPPED keys
+    * match — `Blocking`), so the output is the distinct union of the
+    * capped band joins. Sub-bucket =
     * (row_number over id within (band, key) − 1) / cap, the exact
     * capBlocks rank formula (ids are non-null here, so NULLS FIRST
     * lockstep is moot). MergeWalk, not Auto: q18 already exercises the
-    * adaptive-probe path. The cap is one rank window over every
-    * bucket, built without a Spark job. */
+    * adaptive-probe path. The cap is one rank window per band over
+    * every bucket, built without a Spark job. */
   private def q103(s: SparkSession, dir: String): DataFrame =
     Dedup.minhashLshPairs(table(s, dir, "documents"), "doc_id", "text",
       MinhashK, BandRows, 0.4, graft.operators.LshEncoding.MergeWalk,
@@ -310,16 +309,6 @@ object TextOps {
       val key = (1 to BandRows).map(r => s"sig[${b * BandRows + r}]").mkString(", ")
       s"SELECT id, $b AS band_idx, concat_ws('_', $key) AS band_key FROM sig"
     }.mkString("\n  UNION ALL ")
-    // shares-an-earlier-band over the raw signatures (Dedup.
-    // sharedEarlierBand's slice equality, replayed 1-based)
-    val earlier = (1 until nBands).map { j =>
-      val eq = (0 until j).map { i =>
-        (1 to BandRows).map(r =>
-          s"sa.sig[${i * BandRows + r}] = sb.sig[${i * BandRows + r}]")
-          .mkString("(", " AND ", ")")
-      }.mkString(" OR ")
-      s"WHEN ab.band_idx = $j THEN ($eq)"
-    }.mkString("\n            ")
     s"""WITH t AS (SELECT doc_id AS id,
           list_distinct(list_transform(${sqlTokenSet("text")}, x -> ${sqlTokenHashMod("x")})) AS toks
           FROM documents),
@@ -331,14 +320,11 @@ object TextOps {
                                             ORDER BY id) - 1) // $LshCapBucket)
                        AS band_key
                    FROM bands),
-        ab AS (SELECT a.id AS id_a, b.id AS id_b, a.band_idx
+        ab AS (SELECT a.id AS id_a, b.id AS id_b
                FROM capped a JOIN capped b
                  ON a.band_idx = b.band_idx AND a.band_key = b.band_key
                     AND a.id < b.id),
-        cand AS (SELECT DISTINCT id_a, id_b FROM ab
-                 JOIN sig sa ON sa.id = ab.id_a
-                 JOIN sig sb ON sb.id = ab.id_b
-                 WHERE NOT (CASE $earlier ELSE FALSE END))
+        cand AS (SELECT DISTINCT id_a, id_b FROM ab)
         SELECT id_a, id_b, jaccard FROM (
           SELECT id_a, id_b,
             round((len(list_intersect(ta.toks, tb.toks))::DOUBLE /

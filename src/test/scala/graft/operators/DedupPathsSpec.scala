@@ -42,8 +42,10 @@ class DedupPathsSpec extends AnyFunSuite {
   }
 
   /** Independent replay: evaluate token sets + signatures through the
-    * public builders, then do banding and exact Jaccard in plain Scala. */
-  private def referencePairs(docs: org.apache.spark.sql.DataFrame): Map[(Long, Long), Double] = {
+    * public builders, then do banding and exact Jaccard in plain Scala.
+    * `banded = false` skips the shared-band test: every verified pair. */
+  private def referencePairs(docs: org.apache.spark.sql.DataFrame,
+      banded: Boolean = true): Map[(Long, Long), Double] = {
     val toks = docs.select(col("doc_id"),
         sort_array(array_distinct(
           transform(tokenSet(col("text")), t => tokenHashMod(t)))).as("toks"))
@@ -53,7 +55,7 @@ class DedupPathsSpec extends AnyFunSuite {
     val ids = toks.keys.toSeq.sorted
     (for {
       a <- ids; b <- ids if a < b
-      shareBand = (0 until K / BandRows).exists(band =>
+      shareBand = !banded || (0 until K / BandRows).exists(band =>
         sigs(a).slice(band * BandRows, (band + 1) * BandRows) ==
           sigs(b).slice(band * BandRows, (band + 1) * BandRows))
       if shareBand
@@ -216,6 +218,62 @@ class DedupPathsSpec extends AnyFunSuite {
       "fixture must actually exercise the cap (some pairs dropped)")
     info(f"cap=4 recall: ${capped.size}/${exact.size} = " +
       f"${capped.size.toDouble / exact.size}%.3f")
+  }
+
+  test("capped pairs are the distinct union of the per-band capped joins") {
+    // A pair the cap splits apart at its first shared band but keeps
+    // together at a later one must be emitted at that later band: the
+    // first-band-wins rule compares CAPPED keys, not raw signature
+    // slices. Model: each band's capped join rebuilt from Skew.capBlocks
+    // keys over the same band keys, unioned, distinct, then the exact
+    // jaccard filter (the MatchingSpec candidate-set case's shape).
+    val cap = 3
+    val docs = corpus(nTemplates = 2, tokensPer = 40, perTemplate = 8,
+      universeOffset = 3000).toDF("doc_id", "text")
+    val got = Dedup.minhashLshPairs(docs, "doc_id", "text", K, BandRows, Threshold,
+        LshEncoding.MergeWalk, maxBucketSize = Some(cap))
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(got.length == got.distinct.length,
+      s"capped output repeats pairs: ${got.diff(got.distinct)}")
+    val sigs = Dedup.minhashSignatures(docs, "doc_id", "text", K)
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toVector).toMap
+    val nBands = K / BandRows
+    // band b's (raw key, capped key) per id, capped by capBlocks itself
+    val keys: Seq[Map[Long, (String, String)]] = (0 until nBands).map { b =>
+      val banded = sigs.toSeq.map { case (id, s) =>
+        (id, s.slice(b * BandRows, (b + 1) * BandRows).mkString("_"))
+      }.toDF("id", "band_key")
+      Skew.capBlocks(banded, col("band_key"), col("id"), cap)
+        .collect().map(r => r.getLong(0) -> (r.getString(1), r.getString(2))).toMap
+    }
+    val verified = referencePairs(docs, banded = false)
+    val model = (for {
+      band <- keys
+      (a, (_, ca)) <- band.toSeq; (b, (_, cb)) <- band.toSeq
+      if a < b && ca == cb && verified.contains((a, b))
+    } yield (a, b)).toSet
+    assert(got.toSet == model,
+      s"missing=${model -- got.toSet} extra=${got.toSet -- model}")
+    // the fixture reaches the case: an emitted pair that shares its raw
+    // band-0 key, is split by the cap at band 0, and pairs at a later band
+    val splitThenPaired = got.filter { case (a, b) =>
+      val (ra, ca) = keys(0)(a); val (rb, cb) = keys(0)(b)
+      ra == rb && ca != cb
+    }
+    assert(splitThenPaired.nonEmpty, "fixture must split a pair at band 0 and pair it later")
+  }
+
+  test("k and bandsOf must be positive, checked by name") {
+    val docs = corpus(nTemplates = 1, tokensPer = 5, perTemplate = 2,
+      universeOffset = 0).toDF("doc_id", "text")
+    Seq((16, 0), (0, 4), (-4, 4)).foreach { case (k, bandsOf) =>
+      val self = intercept[IllegalArgumentException](
+        Dedup.minhashLshPairs(docs, "doc_id", "text", k, bandsOf, Threshold))
+      assert(self.getMessage.contains("k and bandsOf must be positive"), self.getMessage)
+      val incr = intercept[IllegalArgumentException](
+        Dedup.incrementalLshPairs(docs, docs, "doc_id", "text", k, bandsOf, Threshold))
+      assert(incr.getMessage.contains("k and bandsOf must be positive"), incr.getMessage)
+    }
   }
 
   test("plan-only laziness requires candidateBudget=None; the default guards eagerly") {
