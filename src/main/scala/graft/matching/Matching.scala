@@ -166,11 +166,10 @@ object Matching {
     * 32-core reference box, for the guard's wall translation: the r14
     * sf1 uncapped leg ran 245.6 s at ~3.2e8 blocked pairs ≈ 770 ns/pair
     * (scorer = per-pair skill-array intersection — heavier than LSH
-    * verification; see [[graft.operators.LshEncoding.nanosPerCandidate]]
-    * for the dedup-side rates). The default budget (1e8) therefore
-    * admits ≈77 s — single-tier here, so no per-encoding latitude to
-    * close, but the failure message quotes the estimate so the count
-    * has operational meaning (round-16 verdict item 2). */
+    * verification; see [[graft.operators.Dedup.CandidateWallNanos]]
+    * for the dedup-side rate). The default budget (1e8) therefore
+    * admits ≈77 s; the failure message quotes the estimate so the
+    * count has operational meaning (round-16 verdict item 2). */
   val PairWallNanos: Long = 770L
 
   def score(offers: DataFrame, cvs: DataFrame,

@@ -35,44 +35,4 @@ object Schemas {
     StructField("source", StringType),
     StructField("source_url", StringType),
     StructField("html_content", StringType)))
-
-  /** jobs_parsed stage schema (parse_jobs.py:444-449). */
-  val jobParsed: StructType = StructType(Seq(
-    StructField("job_id", StringType),
-    StructField("source", StringType),
-    StructField("title", StringType),
-    StructField("company", StringType),
-    StructField("description", StringType),
-    StructField("requirements", StringType),
-    StructField("location", StringType),
-    StructField("parsed_salary_text", StringType),
-    StructField("contract_type", StringType),
-    StructField("skills", ArrayType(StringType)),
-    StructField("parsed_at", TimestampType),
-    StructField("parsing_quality_score", DoubleType),
-    StructField("html_content", StringType)))
-
-  /** CV record (Fact_CVs, create_tables.sql:98-128) — no producer exists
-    * in the reference; shape reconstructed from the warehouse DDL. */
-  val candidateCv: StructType = StructType(Seq(
-    StructField("cv_id", StringType),
-    StructField("annees_experience", LongType),
-    StructField("niveau_etudes", StringType),
-    StructField("domaine_etudes", StringType),
-    StructField("localisation_souhaitee_id", StringType),
-    StructField("secteur_souhaite_id", StringType),
-    StructField("salaire_souhaite", DoubleType),
-    StructField("type_contrat_souhaite", StringType),
-    StructField("teletravail_souhaite", BooleanType),
-    StructField("competences", ArrayType(StringType)),
-    StructField("competences_ids", ArrayType(StringType)),
-    StructField("certifications", ArrayType(StringType)),
-    StructField("langues", ArrayType(StructType(Seq(
-      StructField("langue", StringType), StructField("niveau", StringType))))),
-    StructField("source_site", StringType),
-    StructField("url_cv", StringType),
-    StructField("scraped_at", TimestampType),
-    StructField("last_updated", TimestampType),
-    StructField("disponibilite", StringType),
-    StructField("statut", StringType)))
 }

@@ -22,21 +22,7 @@ import graft.functions.TextFunctions._
 /** Physical token-set encoding for [[Dedup.minhashLshPairs]]'
   * candidate-verification stage. The choice is purely physical — all
   * encodings produce identical pairs. */
-sealed trait LshEncoding {
-
-  /** Measured end-to-end WALL nanoseconds per verified candidate pair
-    * on the 32-core reference box — the translation the scale guard
-    * uses to convert a candidate COUNT into estimated wall (round-16
-    * verdict item 2: a pure pair-count budget admitted ~300x wall
-    * variance across encoding tiers). Amortized over the whole
-    * operator (banding shuffle included), so small runs underfill it;
-    * at guard-relevant volumes (1e9+) the verification term dominates
-    * and the rate is stable: the bitmap tier measured ~36 ns/candidate
-    * (sf1: 1.1e9 candidates → 40 s), the merge-walk tier ~350 ns wall
-    * (~8 µs CPU — q62's sfg3 half-corpus leg: 2.9e9 → 1010 s wall /
-    * 23,467 CPU-s; SCALE.md round 16). */
-  def nanosPerCandidate: Long
-}
+sealed trait LshEncoding
 object LshEncoding {
 
   /** Sorted-token-array merge-walk verification: no corpus statistics
@@ -44,32 +30,16 @@ object LshEncoding {
     * explain callers pay nothing). The right default at scale — a
     * 100 TB corpus is never small-vocabulary, and probing it to learn
     * that would cost a full stats pass. */
-  case object MergeWalk extends LshEncoding {
-    val nanosPerCandidate: Long = 350L
-  }
+  case object MergeWalk extends LshEncoding
 
   /** Probe corpus statistics at plan-construction time (one
     * approx_count_distinct partial-agg pass, plus an exact distinct
     * collect only when the sketch says the universe is tiny) and pick
-    * the bitmap encoding when it fits. Opt-in because the probe runs
-    * 1-2 eager Spark jobs when the plan is BUILT: right for small and
-    * medium corpora driven straight into an action, wrong for
+    * the dictionary-bitmap encoding when it fits. Opt-in because the
+    * probe runs 1-2 eager Spark jobs when the plan is BUILT: right for
+    * small and medium corpora driven straight into an action, wrong for
     * plan-only callers and for corpora known to be open-vocabulary. */
-  case object Auto extends LshEncoding {
-    /** Conservative: the scale guard runs BEFORE the stats probe
-      * resolves Auto, so it must assume the slow tier — a guard that
-      * assumed the bitmap rate would wave through a merge-walk
-      * resolution ~10x over its wall budget. */
-    val nanosPerCandidate: Long = MergeWalk.nanosPerCandidate
-  }
-
-  /** Dictionary-encode token sets against a known vocabulary of
-    * mod-P token hashes (sorted ascending). Contract: `vocab` must
-    * cover every token in the corpus — unknown tokens would silently
-    * drop out of the bitmaps. What [[Auto]] resolves to. */
-  private[operators] final case class Bitmap(vocab: Array[Long]) extends LshEncoding {
-    val nanosPerCandidate: Long = 36L
-  }
+  case object Auto extends LshEncoding
 }
 
 object Dedup {
@@ -90,29 +60,33 @@ object Dedup {
 
   // ---- shared LSH banding machinery: the self-join
   // ([[minhashLshPairs]]) and incremental ([[incrementalLshPairs]])
-  // paths must emit IDENTICAL candidate sets, so the token prep, band
-  // keys and parameter checks are defined exactly once here, and the
-  // first-band-wins pairing once in [[Blocking]] ----
+  // paths must emit IDENTICAL candidate sets, so the signed frame, band
+  // keys, parameter checks and verification are defined exactly once
+  // here, and the first-band-wins pairing once in [[Blocking]] ----
 
-  /** The band count k / bandsOf, after the preconditions both pair
-    * operators share. */
-  private def bandCount(k: Int, bandsOf: Int, threshold: Double): Int = {
+  /** The band count k / bandsOf, checked by name at every banding entry
+    * point; `threshold` is checked where the caller verifies pairs. */
+  private def bandCount(k: Int, bandsOf: Int, threshold: Option[Double]): Int = {
     require(k > 0 && bandsOf > 0, s"k and bandsOf must be positive, got k=$k, bandsOf=$bandsOf")
     require(k % bandsOf == 0, "k must divide into bands evenly")
-    // the degenerate-doc prune in lshToks is output-neutral only for a
-    // positive threshold (empty-vs-empty token sets score 0.0, which a
+    // the degenerate-doc prune in signedFrame is output-neutral only for
+    // a positive threshold (empty-vs-empty token sets score 0.0, which a
     // t = 0.0 caller would have kept) — enforce the precondition
-    require(threshold > 0, "threshold must be > 0 (no-token docs are pruned before banding)")
+    threshold.foreach(t =>
+      require(t > 0, "threshold must be > 0 (no-token docs are pruned before banding)"))
     k / bandsOf
   }
 
-  /** id + sorted distinct mod-P token hashes. Hash each distinct token
-    * ONCE; signatures and the verification Jaccard both work over the
-    * int64 hashes, re-distincted AFTER hashing (the 31-bit ring can
-    * collide within a document, and sortedJaccard requires set
-    * semantics — matching the oracle's list_distinct). Kept sorted for
-    * the codegen'd merge-walk Jaccard. */
-  private def lshToks(df: DataFrame, idCol: String, textCol: String): DataFrame =
+  /** The (id, toks, sig) frame every LSH entry point reads: id, the
+    * sorted distinct mod-P token hashes and their k-long MinHash
+    * signature. Hash each distinct token ONCE; signatures and the
+    * verification Jaccard both work over the int64 hashes,
+    * re-distincted AFTER hashing (the 31-bit ring can collide within a
+    * document, and sortedJaccard requires set semantics — matching the
+    * oracle's list_distinct). Kept sorted for the codegen'd merge-walk
+    * Jaccard. A consumer that reads only `toks` or only `sig` prunes
+    * the other column away. */
+  private def signedFrame(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
     graft.Engine.spread(
       df.select(col(idCol).as("id"), col(textCol).as("__text"))
         // No-token docs (null/empty/whitespace text) can never clear a
@@ -146,6 +120,9 @@ object Dedup {
       // post-cascade spread shuffled anyway.
       .select(col("id"), sort_array(array_distinct(
         transform(tokenSet(col("__text")), t => tokenHashMod(t)))).as("toks"))
+      // its own projection: inlining the token cascade into the
+      // signature expression would evaluate it twice per row
+      .select(col("id"), col("toks"), minhashFromHashes(col("toks"), k).as("sig"))
 
   /** The nBands band-key strings of a k-long `sig` column. */
   private def bandKeys(sig: Column, nBands: Int, bandsOf: Int): Seq[Column] =
@@ -169,6 +146,13 @@ object Dedup {
       maxBucketSize)
   }
 
+  /** Verified pairs: (id_a, id_b, jaccard) of `cand`, with `jaccard`
+    * rounded to 6 places and kept when >= threshold. */
+  private def scored(cand: DataFrame, jaccard: Column, threshold: Double): DataFrame =
+    cand.select(col("id_a"), col("id_b"),
+        graft.queries.roundSafe(jaccard, 6).as("jaccard"))
+      .where(col("jaccard") >= threshold)
+
   /** MinHash-LSH near-duplicate pairs.
     *
     * bandsOf rows per band; docs sharing any full band become candidate
@@ -181,7 +165,7 @@ object Dedup {
     * running any Spark job.
     *
     * `maxBucketSize` is the recall/cost dial for boilerplate-heavy
-    * corpora: the degenerate-doc prune (see [[lshToks]]) removes the
+    * corpora: the degenerate-doc prune (see [[signedFrame]]) removes the
     * no-token bucket bomb, but REAL template docs band together with
     * perfectly valid signatures, and one hot (band, key) bucket costs
     * O(bucket^2) comparisons. With a cap, each bucket is split by
@@ -213,33 +197,19 @@ object Dedup {
     * histogram ([[bandBucketSizes]]) measure the exact
     * sum(C(bucket, 2)); past the budget the call fails BY NAME
     * ([[ScaleGuardException]]) quoting the volume, the ESTIMATED WALL
-    * it implies at this encoding tier's measured per-candidate rate,
-    * the top-3 offending (band, key) buckets, and the dial. The
-    * default (5e9) passes sf1 with 4.5x margin and trips at sf3 on
-    * this vocabulary (measured 1.15e10 — r16 sweep).
-    *
-    * `wallBudgetSeconds` closes the count budget's 300x per-encoding
-    * wall latitude (round-16 verdict item 2): what a pair count admits
-    * in WALL terms depends on the verification tier — ~36 ns/candidate
-    * bitmap (sf1's 1.1e9 → 40 s) vs ~350 ns wall (~8 µs CPU) merge-walk
-    * (q62's sfg3 half-corpus leg ran 1010 s LEGITIMATELY under the 5e9
-    * count default — [[LshEncoding.nanosPerCandidate]]). The effective
-    * guard bound is the tighter of the two budgets, each translated to
-    * pairs via the encoding's rate ([[effectivePairBudget]]): the
-    * default 600 s caps merge-walk shapes at ~1.7e9 pairs (sf1's 1.1e9
-    * ≈ 385 s still clears) while leaving the bitmap tier count-bound
-    * (600 s ≈ 1.7e10 > 5e9). [[LshEncoding.Auto]] is budgeted at the
-    * merge-walk rate — the guard runs before the stats probe resolves
-    * it, and assuming the fast tier would wave a merge-walk resolution
-    * ~10x over its wall budget. `Some(moreSeconds)` raises it, `None`
-    * removes the wall dimension; `candidateBudget = None` disables the
-    * guard ENTIRELY (both dimensions — the deliberate exact-run
-    * opt-out, e.g. tools/Sf3Sweep). A capped call
-    * never measures. The
-    * guard's histogram re-derives the cascade from `df` rather than
-    * forcing the staged plan onto un-capped callers (staging is
-    * measured a loss or neutral on short-text corpora, SCALE.md
-    * round-8).
+    * it implies at the merge-walk verifier's measured rate
+    * ([[CandidateWallNanos]]), the top-3 offending (band, key) buckets,
+    * and the dial. The default ([[DefaultCandidateBudget]]) is ten
+    * minutes of merge-walk wall: sf1's 1.1e9 candidates clear it, q62's
+    * sfg3 half-corpus leg (2.9e9, 1010 s) trips it. One budget serves
+    * every encoding, because the guard runs before [[LshEncoding.Auto]]
+    * resolves and so cannot know whether the faster bitmap verifier
+    * will run. `Some(larger)` raises it; `candidateBudget = None`
+    * disables the guard (the deliberate exact-run opt-out, e.g.
+    * tools/Sf3Sweep). A capped call never measures. The guard's
+    * histogram re-derives the cascade from `df` rather than forcing the
+    * staged plan onto un-capped callers (staging is measured a loss or
+    * neutral on short-text corpora, SCALE.md round-8).
     *
     * EAGERNESS: with a cap this call runs Spark
     * jobs at CONSTRUCTION time, not first action — the tokenize/
@@ -257,35 +227,21 @@ object Dedup {
     * requires `candidateBudget = None` (with no cap and a non-Auto
     * encoding).
     */
-  val DefaultCandidateBudget: Long = 5000000000L
+  val DefaultCandidateBudget: Long = 1714285714L
 
-  /** Default wall budget for the scale guard (see `wallBudgetSeconds`
-    * on [[minhashLshPairs]]): 10 minutes of estimated single-box wall
-    * at the encoding's measured rate. Generous for an interactive
-    * caller, far under the 20-30 min runs the bare count budget
-    * admitted on merge-walk shapes (r16 sweep). */
-  val DefaultWallBudgetSeconds: Double = 600.0
-
-  /** The guard's effective pair bound: the tighter of the count budget
-    * and the wall budget translated to pairs at the encoding's
-    * measured per-candidate rate. `candidateBudget = None` disables
-    * the guard entirely (exact-run opt-out); a wall-only `None` leaves
-    * the count dimension. */
-  private[operators] def effectivePairBudget(candidateBudget: Option[Long],
-      wallBudgetSeconds: Option[Double], nanosPerCandidate: Long): Option[Long] =
-    candidateBudget.map { b =>
-      wallBudgetSeconds.fold(b) { w =>
-        math.min(b, math.max(1L, (w * 1e9 / nanosPerCandidate).toLong))
-      }
-    }
+  /** Measured end-to-end WALL nanoseconds per verified candidate pair
+    * of the merge-walk verifier on the 32-core reference box, quoted by
+    * the scale guard's failure message: q62's sfg3 half-corpus leg ran
+    * 2.9e9 candidates in 1010 s wall (~8 µs CPU each; SCALE.md round
+    * 16). [[DefaultCandidateBudget]] is 600 s at this rate. */
+  val CandidateWallNanos: Long = 350L
 
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
       k: Int, bandsOf: Int, threshold: Double,
       encoding: LshEncoding = LshEncoding.MergeWalk,
       maxBucketSize: Option[Int] = None,
-      candidateBudget: Option[Long] = Some(DefaultCandidateBudget),
-      wallBudgetSeconds: Option[Double] = Some(DefaultWallBudgetSeconds)): DataFrame = {
-    val nBands = bandCount(k, bandsOf, threshold)
+      candidateBudget: Option[Long] = Some(DefaultCandidateBudget)): DataFrame = {
+    val nBands = bandCount(k, bandsOf, Some(threshold))
     // SCALE GUARD (uncapped path only). Cross-product short-circuit
     // first (round-16 verdict item 3): within one band the buckets
     // PARTITION the <=n banded rows, so Σ C(bucket,2) <= C(n,2) per
@@ -298,8 +254,7 @@ object Dedup {
     // every nearDedup caller. Past the bound, the band histogram
     // measures the true volume; past the budget, fail by name quoting
     // the top offending buckets.
-    if (maxBucketSize.isEmpty) effectivePairBudget(candidateBudget,
-        wallBudgetSeconds, encoding.nanosPerCandidate).foreach { budget =>
+    if (maxBucketSize.isEmpty) candidateBudget.foreach { budget =>
       val n = BigInt(df.count())
       ScaleGuard.enforce(budget, BigInt(nBands) * n * (n - 1) / 2,
         bandBucketSizes(df, idCol, textCol, k, bandsOf)
@@ -309,23 +264,18 @@ object Dedup {
         (measured, top) =>
           s"Dedup.minhashLshPairs: uncapped banding would generate ~$measured " +
             s"candidate pairs, estimated " +
-            s"${ScaleGuard.estimatedWall(measured, encoding.nanosPerCandidate)} wall at " +
-            s"this encoding tier's measured ~${encoding.nanosPerCandidate} " +
-            s"ns/candidate (effective budget $budget pairs = min of " +
-            s"candidateBudget ${candidateBudget.mkString} and wallBudgetSeconds " +
-            s"${wallBudgetSeconds.fold("none")(_.toString)} at that rate). " +
-            s"Top band buckets by " +
+            s"${ScaleGuard.estimatedWall(measured, CandidateWallNanos)} wall at " +
+            s"the merge-walk verifier's measured ~$CandidateWallNanos " +
+            s"ns/candidate (candidateBudget $budget). Top band buckets by " +
             s"pair volume: $top. Hot band buckets grow " +
             "with the corpus on boilerplate vocabularies and in-bucket pairs " +
             "quadratically (sf1 measured exponent 1.23 uncapped vs 0.52 capped " +
             "— SCALE.md round 14). Pass maxBucketSize (the oracle-gated " +
-            "recall/cost dial, q103), raise candidateBudget/wallBudgetSeconds, " +
+            "recall/cost dial, q103), raise candidateBudget, " +
             "or pass candidateBudget=None for a deliberate exact run."
       }
     }
-    val toksRaw = lshToks(df, idCol, textCol)
-    val sigsRaw = toksRaw.select(col("id"), col("toks"),
-      minhashFromHashes(col("toks"), k).as("sig"))
+    val sigsRaw = signedFrame(df, idCol, textCol, k)
     // Staging the tokenize/minhash cascade to scratch ONCE at call time
     // turns every consumer (both band-join sides, Auto's probe) into a
     // cheap parquet scan; SCALE.md round-8 measured it when two verify
@@ -335,11 +285,9 @@ object Dedup {
     // gate corpus (q49 4.27 -> 5.38 s, q53 noise; SCALE.md round 8),
     // though heavy text inverted the trade (BucketCapProbe's long
     // documents).
-    val staged = maxBucketSize.isDefined
     val sigs =
-      if (staged) graft.Engine.spread(Scratch.stage(sigsRaw, "graft-lsh-sigs"))
+      if (maxBucketSize.isDefined) graft.Engine.spread(Scratch.stage(sigsRaw, "graft-lsh-sigs"))
       else sigsRaw
-    val toks = if (staged) sigs.select(col("id"), col("toks")) else toksRaw
 
     // Candidate generation ([[bandPairs]]): one shuffle on (band
     // index, band key), each pair emitted only at its first band whose
@@ -347,7 +295,7 @@ object Dedup {
     // needed (on dense, template-heavy corpora candidates approach
     // all-pairs and that distinct dominated the whole operator).
     // Probe-side parallelism comes from
-    // the spread inside lshToks (unstaged) or after the scratch read
+    // the spread inside signedFrame (unstaged) or after the scratch read
     // (staged); a second spread here would re-shuffle the much wider
     // cascade output for nothing.
     //
@@ -363,11 +311,10 @@ object Dedup {
     def candidates(pre: DataFrame, carried: Seq[String]): DataFrame =
       bandPairs(pre, pre, nBands, bandsOf, carried, maxBucketSize)
         .where(col("id_a") < col("id_b"))
-    def scored(cand: DataFrame, jaccard: Column): DataFrame =
-      cand.select(col("id_a"), col("id_b"),
-          graft.queries.roundSafe(jaccard, 6).as("jaccard"))
-        .where(col("jaccard") >= threshold)
 
+    // Dictionary-encode token sets against the corpus' sorted vocabulary
+    // of mod-P token hashes. Contract: `vocab` covers every token in the
+    // corpus — unknown tokens would silently drop out of the bitmaps.
     def bitmap(vocab: Array[Long]): DataFrame =
       if (vocab.length <= 64) {
         // One machine word per set: Jaccard is entirely built-in bit
@@ -380,7 +327,7 @@ object Dedup {
         val jac = when(uni === 0, 0.0).otherwise(
           bit_count(col("mask_a").bitwiseAND(col("mask_b"))).cast("double") /
             uni.cast("double"))
-        scored(candidates(sigs1, Seq("mask")), jac)
+        scored(candidates(sigs1, Seq("mask")), jac, threshold)
       } else {
         // positions bound as a real column: CollapseProject keeps a
         // non-cheap expression referenced by every mask word from being
@@ -391,16 +338,15 @@ object Dedup {
           .withColumn("mask", array((0 until w).map(j => maskWord(col("__pos"), j)): _*))
           .drop("__pos")
         scored(candidates(sigsW, Seq("mask")),
-          graft.functions.ArrayOps.bitmapJaccard(col("mask_a"), col("mask_b")))
+          graft.functions.ArrayOps.bitmapJaccard(col("mask_a"), col("mask_b")), threshold)
       }
     def mergeWalk: DataFrame =
       scored(candidates(sigs, Seq("toks")),
-        graft.functions.ArrayOps.sortedJaccard(col("toks_a"), col("toks_b")))
+        graft.functions.ArrayOps.sortedJaccard(col("toks_a"), col("toks_b")), threshold)
 
     encoding match {
       case LshEncoding.MergeWalk => mergeWalk
-      case LshEncoding.Bitmap(vocab) => bitmap(vocab)
-      case LshEncoding.Auto => smallUniverse(toks) match {
+      case LshEncoding.Auto => smallUniverse(sigs) match {
         case Some(vocab) => bitmap(vocab)
         case None => mergeWalk
       }
@@ -415,12 +361,12 @@ object Dedup {
     * (BucketCapProbe, SCALE.md round-7). */
   private[graft] def bandBucketSizes(df: DataFrame, idCol: String,
       textCol: String, k: Int, bandsOf: Int): DataFrame = {
-    // parallelism comes from lshToks' internal spread (the CLAUDE.md
+    val nBands = bandCount(k, bandsOf, None)
+    // parallelism comes from signedFrame's internal spread (the
     // single-split rule; ADVICE round-7) — the cascade, explode and
     // partial agg all run in the post-exchange stage
-    lshToks(df, idCol, textCol)
-      .select(col("id"), minhashFromHashes(col("toks"), k).as("sig"))
-      .select(posexplode(array(bandKeys(col("sig"), k / bandsOf, bandsOf): _*))
+    signedFrame(df, idCol, textCol, k)
+      .select(posexplode(array(bandKeys(col("sig"), nBands, bandsOf): _*))
         .as(Seq("band_idx", "band_key")))
       .groupBy("band_idx", "band_key").agg(count(lit(1)).as("size"))
   }
@@ -430,9 +376,10 @@ object Dedup {
     * width for any corpus dense enough for bitmaps to win. */
   private val BitmapMaxVocab = 4096
 
-  /** The corpus' distinct hashed-token universe, when small enough to
-    * dictionary-encode. Gated by approx_count_distinct (one map-side
-    * partial agg — the 100 TB-safe stats probe) so the exact
+  /** The distinct hashed-token universe of a [[signedFrame]]'s `toks`,
+    * when small enough to dictionary-encode. Gated by
+    * approx_count_distinct (one map-side partial agg — the 100 TB-safe
+    * stats probe) so the exact
     * distinct-collect only runs when it is known to be tiny; 2x margin
     * covers the sketch's rsd. Runs 1-2 eager Spark jobs — which is why
     * it only executes under the opt-in [[LshEncoding.Auto]], never for
@@ -441,13 +388,13 @@ object Dedup {
     * promote this eager probe into the default path: the sketch job is
     * what keeps the exact distinct-collect from ever running (and
     * OOMing the driver) on a large-vocabulary corpus. */
-  private def smallUniverse(toks: DataFrame): Option[Array[Long]] = {
-    val approx = toks.select(explode(col("toks")).as("h"))
+  private def smallUniverse(signed: DataFrame): Option[Array[Long]] = {
+    val approx = signed.select(explode(col("toks")).as("h"))
       .agg(approx_count_distinct(col("h")).as("v"))
       .first().getLong(0)
     if (approx > 2L * BitmapMaxVocab) None
     else {
-      val vs = toks.select(explode(col("toks")).as("h")).distinct()
+      val vs = signed.select(explode(col("toks")).as("h")).distinct()
         .collect().map(_.getLong(0)).sorted
       if (vs.length <= BitmapMaxVocab) Some(vs) else None
     }
@@ -819,8 +766,7 @@ object Dedup {
   def nearDedup(df: DataFrame, idCol: String, textCol: String,
       k: Int = 16, bandsOf: Int = 4, threshold: Double = 0.8,
       encoding: LshEncoding = LshEncoding.Auto,
-      candidateBudget: Option[Long] = Some(DefaultCandidateBudget),
-      wallBudgetSeconds: Option[Double] = Some(DefaultWallBudgetSeconds)): DataFrame = {
+      candidateBudget: Option[Long] = Some(DefaultCandidateBudget)): DataFrame = {
     // encoding defaults to Auto here (unlike minhashLshPairs): the CC
     // step below runs eager jobs at call time anyway, so plan-only
     // callers don't exist and the adaptive probe costs nothing extra.
@@ -828,8 +774,7 @@ object Dedup {
     // composed pipeline exactly like the bare pair operator.
     val clusters = connectedComponents(
       minhashLshPairs(df, idCol, textCol, k, bandsOf, threshold, encoding,
-        candidateBudget = candidateBudget,
-        wallBudgetSeconds = wallBudgetSeconds))
+        candidateBudget = candidateBudget))
     val losers = clusters.where(col("id") =!= col("cluster_id"))
       .select(col("id").as(idCol))
     df.join(losers, Seq(idCol), "left_anti")
@@ -851,22 +796,17 @@ object Dedup {
   def incrementalLshPairs(newDf: DataFrame, corpusDf: DataFrame,
       idCol: String, textCol: String,
       k: Int, bandsOf: Int, threshold: Double): DataFrame = {
-    val nBands = bandCount(k, bandsOf, threshold)
-    // parallelism comes from lshToks' internal spread: the cascade,
+    val nBands = bandCount(k, bandsOf, Some(threshold))
+    // parallelism comes from signedFrame's internal spread: the cascade,
     // signature build and banding explode all run post-exchange. The
     // token arrays ride through the band join to the verify, so each
     // side's cascade has one consumer and stays unstaged.
-    def sigsOf(df: DataFrame): DataFrame =
-      lshToks(df, idCol, textCol)
-        .select(col("id"), col("toks"), minhashFromHashes(col("toks"), k).as("sig"))
-
-    bandPairs(sigsOf(newDf), sigsOf(corpusDf), nBands, bandsOf, Seq("toks"), None)
-      .where(col("id_a") =!= col("id_b"))
-      .select(col("id_a").as("new_id"), col("id_b").as("corpus_id"),
-        graft.queries.roundSafe(
-          graft.functions.ArrayOps.sortedJaccard(col("toks_a"), col("toks_b")), 6)
-          .as("jaccard"))
-      .where(col("jaccard") >= threshold)
+    def signed(df: DataFrame) = signedFrame(df, idCol, textCol, k)
+    scored(
+      bandPairs(signed(newDf), signed(corpusDf), nBands, bandsOf, Seq("toks"), None)
+        .where(col("id_a") =!= col("id_b")),
+      graft.functions.ArrayOps.sortedJaccard(col("toks_a"), col("toks_b")), threshold)
+      .select(col("id_a").as("new_id"), col("id_b").as("corpus_id"), col("jaccard"))
   }
 
   /** Fold a new batch's near-dup pairs into an EXISTING cluster
@@ -966,7 +906,7 @@ object Dedup {
       // 0.0 — prune BEFORE the self-join or a block of short docs
       // (plausible under a source/domain blockKey) generates quadratic
       // doomed candidates, the LSH bomb NullTextProbeSpec pins. The
-      // prune sits on the TOKS stage (the lshToks pattern): pushdown
+      // prune sits on the TOKS stage (the signedFrame pattern): pushdown
       // inlines the filter's expression below the projection, so a
       // filter on the full shingle/hash/sort chain would compute that
       // chain TWICE per row (measured: q20 1.3s -> 17s); size(toks)

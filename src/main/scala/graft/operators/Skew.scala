@@ -3,38 +3,18 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Skew-mitigation utilities for hot keys — the manual fallback for
-  * cases AQE's runtime skew-join splitting can't reach (single-key
-  * aggregation hot spots, pair-generating self-joins over one giant
-  * block).
+/** Block caps for hot keys — the manual fallback for pair-generating
+  * joins AQE's runtime skew-join splitting can't reach (a self-join or
+  * cross-set join over one giant block is quadratic in the block,
+  * however its partitions are split).
   *
-  * Pattern: salt the key into `saltBuckets` sub-keys, aggregate
-  * partially per sub-key (spreads one reducer's load across the
-  * cluster), then merge the partials in a second, tiny aggregation.
+  * Pattern: split every block into sub-blocks of at most a cap's rows,
+  * which only pair among themselves — by deterministic rank
+  * ([[capBlocks]]) or by a portable hash of the row id
+  * ([[capBlocksHashed]]). The worst block then costs cap^2
+  * comparisons, and cross-sub-block pairs are the recall given up.
   */
 object Skew {
-
-  /** Two-phase salted count/sum aggregation over a possibly-skewed key.
-    * Deterministic salting (hash of a row-identifying column, not
-    * rand()) keeps reruns and retries stable.
-    *
-    * Honest scope note: for PLAIN count/sum Spark's hash aggregate
-    * already partial-aggregates map-side (a hot key reaches its
-    * reducer as one row per upstream task), so this helper adds a
-    * shuffle for nothing there. The two-phase shape earns its keep
-    * when the partial-aggregation escape hatch is absent: aggregation
-    * buffers that grow with the group (collect_list/set, exact
-    * distinct) or downstream per-key processing after the first phase
-    * — it is the documented TEMPLATE for those, kept deliberately
-    * minimal. */
-  def saltedAgg(df: DataFrame, key: Column, saltSource: Column,
-      valueCol: Column, saltBuckets: Int): DataFrame = {
-    val salted = df.groupBy(key.as("key"),
-        pmod(xxhash64(saltSource), lit(saltBuckets)).as("salt"))
-      .agg(count(lit(1)).as("pc"), sum(valueCol).as("ps"))
-    salted.groupBy(col("key"))
-      .agg(sum(col("pc")).as("cnt"), sum(col("ps")).as("total"))
-  }
 
   /** Cap pair explosion inside a blocking key: rows beyond `maxPerBlock`
     * per block (by deterministic rank on `orderCol`) move to overflow

@@ -276,6 +276,28 @@ class DedupPathsSpec extends AnyFunSuite {
     }
   }
 
+  test("bandBucketSizes checks k and bandsOf by name, like the pair operators") {
+    // the histogram bands the same signatures both pair operators band,
+    // so it refuses the same k / bandsOf: no "/ by zero" death, and no
+    // silent histogram of a banding no pair operator would run
+    val docs = corpus(nTemplates = 1, tokensPer = 5, perTemplate = 2,
+      universeOffset = 0).toDF("doc_id", "text")
+    Seq((16, 0), (0, 4), (-4, 4)).foreach { case (k, bandsOf) =>
+      val err = intercept[IllegalArgumentException](
+        Dedup.bandBucketSizes(docs, "doc_id", "text", k, bandsOf))
+      assert(err.getMessage.contains("k and bandsOf must be positive"), err.getMessage)
+    }
+    val uneven = intercept[IllegalArgumentException](
+      Dedup.bandBucketSizes(docs, "doc_id", "text", 16, 5))
+    assert(uneven.getMessage.contains("k must divide into bands evenly"), uneven.getMessage)
+    val pairs = intercept[IllegalArgumentException](
+      Dedup.minhashLshPairs(docs, "doc_id", "text", 16, 5, Threshold))
+    assert(pairs.getMessage.contains("k must divide into bands evenly"), pairs.getMessage)
+    // a valid banding still histograms: 2 docs x 4 bands
+    assert(Dedup.bandBucketSizes(docs, "doc_id", "text", 16, 4)
+      .agg(sum(col("size"))).first().getLong(0) == 8L)
+  }
+
   test("plan-only laziness requires candidateBudget=None; the default guards eagerly") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val docs = corpus(nTemplates = 4, tokensPer = 12, perTemplate = 3,
@@ -347,35 +369,18 @@ class DedupPathsSpec extends AnyFunSuite {
     assert(err2.getMessage.contains("maxBucketSize"))
   }
 
-  test("wall budget closes the count budget's per-encoding latitude (r16 item 2)") {
-    // per-encoding per-candidate wall rates: bitmap is the fast tier;
-    // Auto budgets at the merge-walk rate because the guard runs BEFORE
-    // the stats probe resolves it (assuming the fast tier would wave a
-    // merge-walk resolution ~10x over its wall budget)
-    assert(LshEncoding.Bitmap(Array(1L)).nanosPerCandidate <
-      LshEncoding.MergeWalk.nanosPerCandidate)
-    assert(LshEncoding.Auto.nanosPerCandidate ==
-      LshEncoding.MergeWalk.nanosPerCandidate)
-    // effective bound = min(count budget, wall budget / rate). With the
-    // defaults: the bitmap tier stays COUNT-bound (600 s at 36 ns is
-    // ~1.7e10 > 5e9) while merge-walk becomes WALL-bound at ~1.7e9 —
-    // sf1's measured 1.1e9 (≈385 s) still clears, q62's sfg3 2.9e9
-    // (the 1010 s run the count budget waved through — r16 verdict
-    // item 2) now trips
-    val bitmapBound = Dedup.effectivePairBudget(
-      Some(Dedup.DefaultCandidateBudget), Some(Dedup.DefaultWallBudgetSeconds),
-      LshEncoding.Bitmap(Array(1L)).nanosPerCandidate).get
-    assert(bitmapBound == Dedup.DefaultCandidateBudget)
-    val mwBound = Dedup.effectivePairBudget(
-      Some(Dedup.DefaultCandidateBudget), Some(Dedup.DefaultWallBudgetSeconds),
-      LshEncoding.MergeWalk.nanosPerCandidate).get
-    assert(mwBound < Dedup.DefaultCandidateBudget)
-    assert(mwBound > 1100000000L, s"sf1's 1.1e9 must still clear: $mwBound")
-    assert(mwBound < 2900000000L, s"q62's sfg3 2.9e9 must now trip: $mwBound")
-    // candidateBudget=None disables BOTH dimensions (the exact-run
-    // opt-out, e.g. tools/Sf3Sweep); wallBudget=None keeps the count one
-    assert(Dedup.effectivePairBudget(None, Some(600.0), 350L).isEmpty)
-    assert(Dedup.effectivePairBudget(Some(5L), None, 350L).contains(5L))
+  test("one candidate budget: sf1 clears, q62 sfg3 trips, wall is quoted") {
+    // one budget for every encoding (the guard runs before Auto
+    // resolves): ten minutes of merge-walk wall at the verifier's
+    // measured rate. sf1's measured 1.1e9 candidates (≈385 s) still
+    // clear it; q62's sfg3 half-corpus leg (2.9e9, the 1010 s run a
+    // 5e9 count budget waved through — r16 verdict item 2) trips it
+    assert(Dedup.DefaultCandidateBudget == 1714285714L)
+    assert(Dedup.DefaultCandidateBudget == (600e9 / Dedup.CandidateWallNanos).toLong)
+    assert(Dedup.DefaultCandidateBudget > 1100000000L,
+      s"sf1's 1.1e9 must still clear: ${Dedup.DefaultCandidateBudget}")
+    assert(Dedup.DefaultCandidateBudget < 2900000000L,
+      s"q62's sfg3 2.9e9 must trip: ${Dedup.DefaultCandidateBudget}")
     // the guard's failure message quotes the estimated wall alongside
     // the count, plus the rate it used
     val docs = (1 to 40).map(i => (i.toLong, "alpha beta gamma delta epsilon"))
@@ -386,11 +391,6 @@ class DedupPathsSpec extends AnyFunSuite {
     assert(err.getMessage.contains("estimated") &&
       err.getMessage.contains("wall") &&
       err.getMessage.contains("ns/candidate"), err.getMessage)
-    // a wall-only trip: count budget generous, wall budget tiny
-    val err2 = intercept[ScaleGuardException](
-      Dedup.minhashLshPairs(docs, "doc_id", "text", K, BandRows, Threshold,
-        candidateBudget = Some(Long.MaxValue), wallBudgetSeconds = Some(1e-7)))
-    assert(err2.getMessage.contains("wallBudgetSeconds"), err2.getMessage)
     // Matching's guard quotes the same wall form at its own scorer rate
     val offers = Seq((1L, 1L, 1L, Seq(1L), 50000.0, "senior"))
       .toDF("offre_id", "localisation_id", "secteur_id", "competences_ids",

@@ -1,24 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark.spark
 
 class SkewSpec extends AnyFunSuite {
   import spark.implicits._
-
-  test("salted aggregation equals direct aggregation") {
-    val df = (1 to 1000).map(i => (if (i <= 900) "hot" else s"k$i", i.toLong, i.toDouble))
-      .toDF("key", "id", "v")
-    val direct = df.groupBy("key")
-      .agg(count(lit(1)).as("cnt"), sum($"v").as("total"))
-      .orderBy("key").collect()
-    val salted = Skew.saltedAgg(df, $"key", $"id", $"v", saltBuckets = 8)
-      .orderBy("key").collect()
-    assert(direct.map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq ==
-      salted.map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq)
-  }
 
   test("capBlocks bounds rows per block and is deterministic") {
     val df = (1 to 100).map(i => ("giant", i.toLong)).toDF("block", "id")

@@ -46,6 +46,36 @@ class IngestSpec extends AnyFunSuite {
     assert(sparse.isNullAt(sparse.fieldIndex("salary_amount")))
   }
 
+  test("parseKafka decodes the binary key and parses the value by the fixed schema") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    val extraMsg = """{"job_id":"0123456789abcdef","title":"Comptable","bonus":"x"}"""
+    // the Kafka source's shape: binary key/value plus topic coordinates
+    val kafka = Seq(("k-full", fullMsg), ("k-extra", extraMsg), ("k-bad", "{not json"))
+      .zipWithIndex.map { case ((k, v), i) =>
+        (k.getBytes(UTF_8), v.getBytes(UTF_8), "jobs_raw", 0, i.toLong)
+      }
+      .toDF("key", "value", "topic", "partition", "offset")
+    val parsed = IngestTransform.parseKafka(kafka)
+    // exactly the key plus the 17 declared fields: undeclared producer
+    // fields (bonus, posted_date, ...) and the topic coordinates drop
+    assert(parsed.columns.toSeq ==
+      "kafka_key" +: graft.model.Schemas.jobOfferRaw.fieldNames.toSeq)
+    val byKey = parsed.collect().map(r => r.getAs[String]("kafka_key") -> r).toMap
+    assert(byKey.keySet == Set("k-full", "k-extra", "k-bad"))
+    val full = byKey("k-full")
+    assert(full.getAs[String]("job_id") == "a1b2c3d4e5f60718")
+    assert(full.getAs[String]("title") == "Développeur   Python    Senior") // raw: enrich cleanses
+    assert(full.getAs[org.apache.spark.sql.Row]("salary").getAs[Int]("amount") == 800000)
+    assert(full.getSeq[String](full.fieldIndex("skills")) == Seq("Python", "Sql"))
+    val extra = byKey("k-extra")
+    assert(extra.getAs[String]("job_id") == "0123456789abcdef")
+    assert(extra.getAs[String]("title") == "Comptable")
+    assert(extra.isNullAt(extra.fieldIndex("company")))
+    // a malformed value keeps its row and key, every declared field null
+    val bad = byKey("k-bad")
+    assert((1 until bad.length).forall(bad.isNullAt), bad)
+  }
+
   test("ingest dedup drops replayed job_ids within the watermark horizon") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-dedup-stream").toString
     // the same message replayed (at-least-once) plus one distinct offer
